@@ -18,9 +18,10 @@ flip the generation pointer.
 is tokenized); ``--delta`` consumes a pre-built one. ``--main-latest``
 resolves ``--main`` as a publish root (publish.py LATEST pointer);
 ``--publish`` writes the merged result as the next immutable generation
-of the ``--output`` root. ``--delete-ids`` compacts the merged (or, with
-no delta, the main) index — exact df/idf/avgdl recompute. Prints a
-one-line JSON report.
+of the ``--output`` root. ``--delete-ids`` removes those ids from the
+main index and the delta in the same rebuild pass as the merge (a
+deleted id beats its upsert), or compacts the main index when no delta
+is given — exact df/idf/avgdl recompute. Prints a one-line JSON report.
 """
 
 from __future__ import annotations
@@ -63,6 +64,9 @@ def main() -> None:
     report: dict = {"main": main_path, "main_n_docs": idx.n_docs}
 
     t0 = time.perf_counter()
+    ids = spark.read.parquet(args.delete_ids) if args.delete_ids else None
+    if ids is not None:
+        report["delete_ids"] = ids.count()
     if args.delta or args.delta_docs:
         if args.delta_docs:
             delta = build_index(
@@ -74,10 +78,10 @@ def main() -> None:
         else:
             delta = Index.load(spark, args.delta)
         report["delta_n_docs"] = delta.n_docs
-        idx = merge_indexes(idx, delta, on_conflict=args.on_conflict)
-    if args.delete_ids:
-        ids = spark.read.parquet(args.delete_ids)
-        report["delete_ids"] = ids.count()
+        idx = merge_indexes(
+            idx, delta, on_conflict=args.on_conflict, deleted=ids
+        )
+    else:
         idx = delete_docs(idx, ids)
 
     if args.publish:

@@ -369,14 +369,11 @@ def _merged_index(spark, sf_dir):
     """Build the gate corpus via the FULL LSM lifecycle (memoized per
     sf_dir): base = fresh docs + STALE copies of the %5==0 docs (content
     mutated) + junk docs at shifted ids; delta = the true %5==0 docs.
-    ``merge_indexes`` (right-wins) must replace every stale copy and
-    ``delete_docs`` must excise the junk with exact global-stat
+    One ``merge_indexes`` pass must replace every stale copy (right
+    wins) and excise the junk (``deleted``) with exact global-stat
     recompute — so the result is value-identical to a one-shot build
     over ``documents`` and SQL_BM25_TOPK answers it unchanged."""
-    from search_engine_spark.operators.merge import (
-        delete_docs,
-        merge_indexes,
-    )
+    from search_engine_spark.operators.merge import merge_indexes
 
     hit = _MERGED_CACHE.get(sf_dir)
     if hit is not None and hit.postings.sparkSession is spark:
@@ -392,9 +389,7 @@ def _merged_index(spark, sf_dir):
     base_src = docs.where(~five).unionByName(stale).unionByName(junk)
     base = build_index(base_src, text_col="text", cfg=SIMPLE_CFG)
     delta = build_index(docs.where(five), text_col="text", cfg=SIMPLE_CFG)
-    merged = merge_indexes(base, delta)          # right-wins upsert
-    junk_ids = junk.select("doc_id")
-    final = delete_docs(merged, junk_ids)        # compaction
+    final = merge_indexes(base, delta, deleted=junk.select("doc_id"))
     final.postings = final.postings.persist()
     final.term_stats = final.term_stats.persist()
     final.doc_stats = final.doc_stats.persist()
@@ -403,9 +398,9 @@ def _merged_index(spark, sf_dir):
 
 
 def q_merged_bm25_topk(spark, sf_dir):
-    """BM25 top-k over a merge_indexes + delete_docs lifecycle index:
+    """BM25 top-k over a merge_indexes(deleted=...) lifecycle index:
     the driver hash-check pins upsert-merge + compaction ==
-    one-shot build == SQL (merge.py:487-576)."""
+    one-shot build == SQL (operators/merge.py)."""
     from search_engine_spark.operators.query import search
 
     idx = _merged_index(spark, sf_dir)
@@ -2420,10 +2415,14 @@ def q_seq_tokens(spark, sf_dir):
     """Packed training sequences MATERIALIZED (seq_id -> token array):
     the trainer-facing end of the packing chain — slice rows joined
     back to doc token arrays, reassembled per sequence in stream
-    order."""
+    order. The array is compared as the md5 of its space-joined tokens
+    (the driver hashes scalar columns only)."""
     from search_engine_spark.operators.textstats import emit_sequences
 
-    return emit_sequences(_docs(spark, sf_dir), budget=512)
+    return emit_sequences(_docs(spark, sf_dir), budget=512).select(
+        "seq_id", "n_docs", "n_tokens",
+        F.md5(F.concat_ws(" ", "tokens")).alias("tokens_md5"),
+    )
 
 
 SQL_SEQ_TOKENS = """
@@ -2462,7 +2461,8 @@ pieces AS (
 SELECT seq_id::BIGINT AS seq_id,
        count(*)::BIGINT AS n_docs,
        len(flatten(list(piece ORDER BY seq_pos)))::BIGINT AS n_tokens,
-       flatten(list(piece ORDER BY seq_pos)) AS tokens
+       md5(array_to_string(flatten(list(piece ORDER BY seq_pos)), ' '))
+         AS tokens_md5
 FROM pieces
 GROUP BY seq_id
 """

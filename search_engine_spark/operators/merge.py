@@ -9,11 +9,14 @@ DELTA index from the new/updated documents, then merge it into the
 main index without touching the raw text again:
 
     delta = build_index(new_docs)            # tokenizes only the delta
-    main  = merge_indexes(main, delta)       # no retokenization
+    main  = merge_indexes(main, delta, deleted=tombstone_ids)
 
 ``merge_indexes`` is an UPSERT (a doc_id present in both sides takes the
-right/delta side's postings — a recrawled page replaces its old copy);
-``delete_docs`` is the matching compaction for removed documents.
+right/delta side's postings — a recrawled page replaces its old copy).
+Its ``deleted`` ids are compacted out of both sides in the SAME pass,
+so one change set (adds + removes, like a Delta Lake commit's action
+set) costs one rebuild; a tombstone beats a same-set upsert.
+``delete_docs`` is that pass with an empty delta.
 
 Why a merge must re-SCORE everything (and why that is still cheap):
 BM25 weights are denormalized into the posting lists (the reference
@@ -41,6 +44,8 @@ the delta/delete doc ids, so the merge splits into:
 
 What is never re-run is tokenization/stemming — the dominant cost of a
 full rebuild — and the delta side's raw text is never read at all.
+What IS rewritten: each clean shard's bm25 binary and WAND bounds, and
+(once saved or published) every table — a generation is a full copy.
 The result is value-identical to ``build_index`` over the merged
 corpus (pinned by tests/test_merge.py on both storage profiles; on the
 codec profile with a WEIGHTED sectioned analyzer, stored tf is already
@@ -367,51 +372,82 @@ def _rescore_clean_shards(
     )
 
 
-def _shard_of(ids_df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    return ids_df.select(
-        (F.col("doc_id") / F.lit(cfg.docs_per_shard))
-        .cast("long")
-        .alias("shard")
-    ).distinct()
-
-
 def _incremental_rebuild(
     a: Index,
-    drop_ids: DataFrame,
-    add_flat: DataFrame | None,
-    add_doc_stats: DataFrame | None,
+    delta: Index | None,
+    deleted,
     cfg: EngineConfig,
-    docs: DataFrame | None,
     force_regroup: bool = False,
 ) -> Index:
-    """Shared tail of merge/delete: new doc_stats + globals, dirty-shard
-    split, regroup dirty / rescore clean, term_stats recompute."""
-    doc_stats = a.doc_stats.select("doc_id", "doc_len").join(
-        drop_ids, "doc_id", "left_anti"
-    )
-    if add_doc_stats is not None:
+    """Apply one change set to ``a`` in ONE pass: upsert ``delta`` (right
+    wins) and remove the ``deleted`` ids (a ``doc_id`` DataFrame or an
+    id iterable) from both sides — a tombstone beats a same-set upsert.
+    Then new globals, dirty/clean split, regroup/rescore, term_stats."""
+    if deleted is not None and not isinstance(deleted, DataFrame):
+        deleted = local_df(
+            a.postings.sparkSession,
+            [(int(i),) for i in deleted],
+            "doc_id long",
+        )
+    if deleted is not None:
+        deleted = deleted.select("doc_id")
+    drop_ids, small = deleted, False
+    if delta is not None:
+        drop_ids = delta.doc_stats.select("doc_id")
+        if deleted is not None:
+            drop_ids = drop_ids.unionByName(deleted)
+        # the driver knows the delta's size and counts the tombstones (a
+        # delete list may be any size): broadcast the anti-joins only for
+        # a small change set, so the main side is filtered map-side
+        # (past ~2M ids Spark picks; AQE may still broadcast)
+        n_dead = deleted.count() if deleted is not None else 0
+        small = delta.n_docs + n_dead <= 2_000_000
+
+    def keep(df: DataFrame, ids: DataFrame | None) -> DataFrame:
+        if ids is None:
+            return df
+        ids = F.broadcast(ids) if small else ids
+        return df.join(ids, "doc_id", "left_anti")
+
+    doc_stats = keep(a.doc_stats.select("doc_id", "doc_len"), drop_ids)
+    docs = keep(a.docs, drop_ids) if a.docs is not None else None
+    if delta is not None:
         doc_stats = doc_stats.unionByName(
-            add_doc_stats.select("doc_id", "doc_len")
+            keep(delta.doc_stats.select("doc_id", "doc_len"), deleted)
+        )
+        # keep the UNION of columns: a delta built from raw docs lacks
+        # page_rank (and may lack sha256) — those must survive the merge
+        # with nulls on the delta rows (the query path fillna(0.0)s
+        # page_rank), not be silently dropped by a column intersection
+        docs = (
+            docs.unionByName(
+                keep(delta.docs, deleted), allowMissingColumns=True
+            )
+            if docs is not None and delta.docs is not None
+            else None
         )
     agg = doc_stats.agg(
         F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
     ).collect()[0]
     n_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
 
-    # dirty shard set: shards containing dropped/replaced docs plus the
-    # shards the added docs land in (doc-id-range sharding makes this
-    # exact). Driver-side list — bounded by _MAX_DIRTY_SHARDS.
-    dirty_df = _shard_of(drop_ids, cfg)
-    if add_doc_stats is not None:
-        dirty_df = dirty_df.unionByName(
-            _shard_of(add_doc_stats.select("doc_id"), cfg)
-        ).distinct()
+    # dirty shard set: the shards of every dropped id — the delta's ids
+    # are in drop_ids, so this covers deleted, replaced and added docs
+    # (doc-id-range sharding makes it exact). Driver-side list, bounded
+    # by _MAX_DIRTY_SHARDS.
     dirty = (
         []
         if force_regroup
         else [
             r.shard
-            for r in dirty_df.limit(_MAX_DIRTY_SHARDS + 1).collect()
+            for r in drop_ids.select(
+                (F.col("doc_id") / F.lit(cfg.docs_per_shard))
+                .cast("long")
+                .alias("shard")
+            )
+            .distinct()
+            .limit(_MAX_DIRTY_SHARDS + 1)
+            .collect()
         ]
     )
 
@@ -430,11 +466,11 @@ def _incremental_rebuild(
             avgdl,
         )
 
-    flat = _flat_rows(
-        touched_rows, a.cfg.store_arrays, a.doc_stats
-    ).join(drop_ids, "doc_id", "left_anti")
-    if add_flat is not None:
-        flat = flat.unionByName(add_flat)
+    flat = keep(
+        _flat_rows(touched_rows, a.cfg.store_arrays, a.doc_stats), drop_ids
+    )
+    if delta is not None:
+        flat = flat.unionByName(keep(flat_postings(delta), deleted))
 
     k1, b = cfg.bm25_k1, cfg.bm25_b
     per_term = (
@@ -519,12 +555,13 @@ def _incremental_rebuild(
         cfg=cfg,
         docs=docs,
         # this merge's own cache, plus the caches of the chain that
-        # produced its inputs (e.g. delete_docs over a merge over a
-        # delta build) — release() after publish frees the whole chain.
+        # produced its inputs (e.g. a fresh delta build's token cache) —
+        # release() after publish frees the whole chain.
         owned_caches=(
             [postings if clean is None or n_docs <= PERSIST_FULL_MAX_DOCS
              else regrouped]
             + list(getattr(a, "owned_caches", []) or [])
+            + list(getattr(delta, "owned_caches", []) or [])
         ),
     )
 
@@ -534,6 +571,7 @@ def merge_indexes(
     b: Index,
     cfg: EngineConfig | None = None,
     on_conflict: str = "right",
+    deleted=None,
 ) -> Index:
     """Upsert-merge two finalized indexes (right side wins on doc_id).
 
@@ -541,6 +579,10 @@ def merge_indexes(
     shared doc_ids, the recrawl semantics) or ``"error"`` (raise if the
     doc-id sets overlap — the append-only delta case where an overlap
     means an id-allocation bug upstream).
+
+    ``deleted``: optional ids removed from BOTH sides in the same pass
+    (== ``delete_docs`` over the merge), in any form ``delete_docs``
+    takes.
 
     Output layout follows ``cfg`` (default: ``a.cfg``); content-shaping
     config fields must agree between the two sides. NOTE: when the
@@ -554,75 +596,33 @@ def merge_indexes(
             f"on_conflict must be 'right' or 'error': {on_conflict!r}"
         )
     cfg = cfg or a.cfg
-
-    b_ids = b.doc_stats.select("doc_id")
-    # the driver knows the delta's exact cardinality — hint the upsert
-    # anti-join to broadcast for the common small-delta merge so the
-    # main side is filtered map-side. Past ~2M ids fall back to Spark's
-    # own strategy (AQE may still pick broadcast at runtime).
-    if b.n_docs <= 2_000_000:
-        b_ids = F.broadcast(b_ids)
     if on_conflict == "error":
+        b_ids = b.doc_stats.select("doc_id")
+        if b.n_docs <= 2_000_000:
+            b_ids = F.broadcast(b_ids)
         n_overlap = a.doc_stats.join(b_ids, "doc_id", "left_semi").count()
         if n_overlap:
             raise ValueError(
                 f"doc-id overlap ({n_overlap} docs) with on_conflict='error'"
             )
-
-    docs = None
-    if a.docs is not None and b.docs is not None:
-        # keep the UNION of columns: a delta built from raw docs lacks
-        # page_rank (and may lack sha256) — those must survive the merge
-        # with nulls on the delta rows (the query path fillna(0.0)s
-        # page_rank), not be silently dropped by a column intersection
-        docs = (
-            a.docs.join(b_ids, "doc_id", "left_anti")
-            .unionByName(b.docs, allowMissingColumns=True)
-        )
-    merged = _incremental_rebuild(
+    return _incremental_rebuild(
         a,
-        drop_ids=b_ids,
-        add_flat=flat_postings(b),
-        add_doc_stats=b.doc_stats,
-        cfg=cfg,
-        docs=docs,
+        b,
+        deleted,
+        cfg,
         # layout flip (store_arrays differs): every row of a must be
         # rewritten anyway — take the exhaustive regroup path
         force_regroup=cfg.store_arrays != a.cfg.store_arrays,
     )
-    # the delta side's caches (e.g. a fresh delta build's token cache)
-    # belong to the merged chain too: release() after publish frees
-    # everything this generation pinned
-    merged.owned_caches.extend(getattr(b, "owned_caches", []) or [])
-    return merged
 
 
 def delete_docs(index: Index, doc_ids) -> Index:
     """Compaction: a new index with ``doc_ids`` removed and ALL global
     statistics (N, avgdl, df/idf, bm25 weights) exactly recomputed —
-    value-identical to rebuilding from the surviving corpus. Only
-    shards that contained deleted docs are regrouped; the rest are
-    rescored in place.
+    value-identical to rebuilding from the surviving corpus: the
+    ``merge_indexes(deleted=...)`` pass with no delta. Only shards that
+    contained deleted docs are regrouped; the rest are rescored in place.
 
     ``doc_ids``: a DataFrame with a ``doc_id`` column, or a Python
     iterable of ids."""
-    spark = index.postings.sparkSession
-    if isinstance(doc_ids, DataFrame):
-        ids_df = doc_ids.select("doc_id").distinct()
-    else:
-        ids_df = local_df(
-            spark, [(int(i),) for i in doc_ids], "doc_id long"
-        )
-    docs = (
-        index.docs.join(ids_df, "doc_id", "left_anti")
-        if index.docs is not None
-        else None
-    )
-    return _incremental_rebuild(
-        index,
-        drop_ids=ids_df,
-        add_flat=None,
-        add_doc_stats=None,
-        cfg=index.cfg,
-        docs=docs,
-    )
+    return _incremental_rebuild(index, None, doc_ids, index.cfg)

@@ -813,11 +813,14 @@ def encode_avi(frames: np.ndarray, fps: int) -> bytes:
 def _riff_walk(payload: bytes, pos: int, end: int, out: list) -> None:
     """Flatten a RIFF chunk tree into (tag, body) leaves — LIST chunks
     recurse, word alignment honored. The ONE chunk walk both RIFF
-    codecs (WAV and AVI) parse with."""
+    codecs (WAV and AVI) parse with. A chunk that claims more bytes
+    than its parent holds raises ``ValueError``."""
     while pos + 8 <= end:
         tag = payload[pos : pos + 4]
         (ln,) = struct.unpack_from("<I", payload, pos + 4)
         start = pos + 8
+        if start + ln > end:
+            raise ValueError("truncated RIFF chunk")
         if tag == b"LIST":
             _riff_walk(payload, start + 4, start + ln, out)
         else:

@@ -7,11 +7,12 @@ SE/BackendManager.java queries concurrently under SQLite's writer
 lock). This module is the distributed version with real increments:
 
   file-source ``readStream`` over the corpus directory
-      └─ per micro-batch (foreachBatch):
-           1. ``build_index`` over ONLY the new docs (the delta —
+      └─ per micro-batch (foreachBatch), ONE rebuild pass:
+           1. ``build_index`` over ONLY the batch's live rows (the delta —
               tokenization runs once per document, ever)
-           2. ``merge_indexes(published, delta)`` — right-wins upsert;
-              only shards the delta touches are regrouped, clean
+           2. ``merge_indexes(published, delta, deleted=tombstones)`` —
+              right-wins upsert + CDC tombstone compaction in one pass;
+              only shards the change set touches are regrouped, clean
               shards are rescored in place (operators/merge.py)
            3. ``publish_index`` — the merged index becomes immutable
               generation K+1; the LATEST pointer flips atomically
@@ -27,9 +28,10 @@ is value-identical (pinned in tests/test_live_index.py). A replay
 costs one redundant generation, never a wrong one.
 
 Scale notes:
-  * Per-batch cost is O(delta tokens) + O(dirty shards), not O(corpus):
-    the merge never re-tokenizes and never rewrites clean shards'
-    postings (see tools/merge_bench.py for the measured crossover).
+  * Per-batch cost is O(delta tokens) + O(dirty shards) regrouping plus
+    a re-encode of every clean shard's bm25 binary (avgdl moved), and
+    ``publish_index`` writes the whole index as the new generation
+    (see tools/merge_bench.py for the measured crossover).
   * Generations accumulate until ``prune_generations`` — run it from
     the same control loop on whatever cadence retention policy says.
   * For very high arrival rates, raise ``maxFilesPerTrigger`` (bigger
@@ -123,48 +125,52 @@ class StreamingLiveIndex:
 
         docs_b = batch_df.persist()
         try:
-            if not docs_b.head(1):
-                return
-            has_cdc = self.deleted_col in docs_b.columns
-            alive = (
-                docs_b.where(
-                    ~F.coalesce(F.col(self.deleted_col), F.lit(False))
-                )
-                if has_cdc
-                else docs_b
-            )
-            ptr = read_latest(self.root)
-            current = (
-                load_latest_index(self.spark, self.root)
-                if ptr is not None
-                else None
-            )
+            alive, dead_ids = docs_b, []
+            if self.deleted_col in docs_b.columns:
+                tomb = F.coalesce(F.col(self.deleted_col), F.lit(False))
+                alive = docs_b.where(~tomb)
+                # a tombstone with a null id names no document
+                dead_ids = [
+                    r[0]
+                    for r in docs_b.where(tomb)
+                    .select(self.doc_id_col)
+                    .dropna()
+                    .collect()
+                ]
             if self.transform is not None:
                 alive = self.transform(alive)
-            merged = current
-            if alive.head(1):
-                delta = build_index(
+            # the one probe left: only Spark knows what the CDC filter
+            # and the transform hook kept
+            has_live = bool(alive.head(1))
+            current = (
+                load_latest_index(self.spark, self.root)
+                if read_latest(self.root) is not None
+                else None
+            )
+            if has_live:
+                if current is None and dead_ids:
+                    # first generation: tombstones can only hit this
+                    # batch's own rows, so drop them before the build
+                    alive = alive.where(
+                        ~F.col(self.doc_id_col).isin(dead_ids)
+                    )
+                merged = build_index(
                     alive,
                     text_col=self.text_col,
                     doc_id_col=self.doc_id_col,
                     cfg=self.cfg,
                 )
-                merged = (
-                    delta
-                    if merged is None
-                    else merge_indexes(merged, delta)
-                )
-            if has_cdc and merged is not None:
-                dead = docs_b.where(
-                    F.coalesce(F.col(self.deleted_col), F.lit(False))
-                ).select(F.col(self.doc_id_col).alias("doc_id"))
-                if dead.head(1):
-                    from search_engine_spark.operators.merge import (
-                        delete_docs,
+                if current is not None:
+                    # one rebuild for the whole change set: upserts and
+                    # tombstones in the same pass (a tombstone wins)
+                    merged = merge_indexes(
+                        current, merged, deleted=dead_ids or None
                     )
+            elif dead_ids and current is not None:
+                from search_engine_spark.operators.merge import delete_docs
 
-                    merged = delete_docs(merged, dead)
-            if merged is None:
+                merged = delete_docs(current, dead_ids)
+            else:
                 return
             publish_index(merged, self.root)
             # the generation is durable on disk — unpersist every cache
@@ -173,20 +179,6 @@ class StreamingLiveIndex:
             # for the life of the stream)
             merged.release()
             if self.vector_dim:
-                dead_ids = (
-                    [
-                        int(r["doc_id"])
-                        for r in docs_b.where(
-                            F.coalesce(
-                                F.col(self.deleted_col), F.lit(False)
-                            )
-                        )
-                        .select(F.col(self.doc_id_col).alias("doc_id"))
-                        .collect()
-                    ]
-                    if has_cdc
-                    else []
-                )
                 self._update_vectors(alive, dead_ids)
             self.batches_published += 1
         finally:

@@ -109,11 +109,14 @@ def test_replayed_batch_is_value_identical(spark, tmp_path):
     assert sig_replay == _signature(rebuilt)
 
 
-def test_cdc_tombstones_compact_deletions(spark, tmp_path):
+def test_cdc_tombstones_compact_deletions(spark, tmp_path, monkeypatch):
     """CDC stream: a micro-batch mixing upserts and deleted=true
     tombstones must publish a generation value-identical to a build
     over the surviving corpus (tombstoned ids compacted out, recrawled
-    docs replaced right-wins)."""
+    docs replaced right-wins, a same-batch upsert + tombstone of one id
+    deleted) — in ONE incremental rebuild pass."""
+    from search_engine_spark.operators import merge
+
     corpus_dir = str(tmp_path / "corpus")
     root = str(tmp_path / "live_root")
     base = generate_corpus(spark, 200, seed=3).cache()
@@ -122,14 +125,15 @@ def test_cdc_tombstones_compact_deletions(spark, tmp_path):
     live.process_available()
     assert live.batches_published >= 1
 
-    # wave 2 (CDC): doc_ids % 10 == 0 tombstoned; 200..239 new arrivals;
-    # doc 7 recrawled with changed content
+    # wave 2 (CDC): doc_ids % 10 == 0 and doc 13 tombstoned; 200..239
+    # new arrivals; doc 7 recrawled with changed content; doc 13 also
+    # recrawled in the same batch (the tombstone wins)
     full = generate_corpus(spark, 240, seed=3)
-    dead = base.where(F.col("doc_id") % 10 == 0).withColumn(
-        "deleted", F.lit(True)
-    )
+    dead = base.where(
+        (F.col("doc_id") % 10 == 0) | (F.col("doc_id") == 13)
+    ).withColumn("deleted", F.lit(True))
     recrawl = (
-        full.where(F.col("doc_id") == 7)
+        full.where(F.col("doc_id").isin(7, 13))
         .withColumn(
             "content", F.concat(F.col("content"), F.lit(" zzzrecrawl"))
         )
@@ -138,11 +142,21 @@ def test_cdc_tombstones_compact_deletions(spark, tmp_path):
     arrivals = full.where(F.col("doc_id") >= 200).withColumn(
         "deleted", F.lit(False)
     )
+    real_rebuild, passes = merge._incremental_rebuild, []
+
+    def counted(*args, **kwargs):
+        passes.append(1)
+        return real_rebuild(*args, **kwargs)
+
+    monkeypatch.setattr(merge, "_incremental_rebuild", counted)
     live._handle_batch(dead.unionByName(recrawl).unionByName(arrivals),
                        777)
+    assert len(passes) == 1
 
     # tombstones hit only base ids (< 200); %10==0 arrivals survive
-    tombstoned = (F.col("doc_id") % 10 == 0) & (F.col("doc_id") < 200)
+    tombstoned = (
+        (F.col("doc_id") % 10 == 0) | (F.col("doc_id") == 13)
+    ) & (F.col("doc_id") < 200)
     survivors = (
         full.where(~tombstoned & (F.col("doc_id") != 7))
         .unionByName(
@@ -156,7 +170,7 @@ def test_cdc_tombstones_compact_deletions(spark, tmp_path):
     rebuilt = build_index(survivors, cfg=CFG)
     assert _signature(merged) == _signature(rebuilt)
     srv = ServingIndex.load_latest(root)
-    assert srv.n_docs == 240 - 20
+    assert srv.n_docs == 240 - 21
     assert 7 in {d for d, *_ in srv.search("zzzrecrawl", k=5)}
 
 

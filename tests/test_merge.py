@@ -66,11 +66,24 @@ def test_merge_equals_rebuild(spark, split_corpus, store_arrays):
     cfg = EngineConfig(
         docs_per_shard=64, block_size=16, store_arrays=store_arrays
     )
-    merged = merge_indexes(build_index(a, cfg=cfg), build_index(b, cfg=cfg))
+    ia, ib = build_index(a, cfg=cfg), build_index(b, cfg=cfg)
+    merged = merge_indexes(ia, ib)
     rebuilt = build_index(full, cfg=cfg)
     assert _index_signature(merged) == _index_signature(rebuilt)
     for q in QUERIES:
         assert _topk(merged, q) == _topk(rebuilt, q), q
+
+    # one pass with tombstones: 5 is only in a, 130 in both sides, 200
+    # only in the delta — a tombstone beats its same-pass upsert
+    dead = [5, 130, 200]
+    one_pass = merge_indexes(
+        ia, ib, deleted=full.where(F.col("doc_id").isin(dead))
+    )
+    want = _index_signature(
+        build_index(full.where(~F.col("doc_id").isin(dead)), cfg=cfg)
+    )
+    assert _index_signature(one_pass) == want
+    assert _index_signature(delete_docs(merged, dead)) == want
 
 
 def test_merge_right_wins_on_conflict(spark, split_corpus):

@@ -290,7 +290,7 @@ def test_wav_codec_roundtrip_and_stdlib_interop():
     """decode(encode(s)) == s for mono and stereo int16 PCM; the
     bytes interoperate BOTH WAYS with the stdlib wave module (our
     writer is readable by wave, wave's writer is readable by us) —
-    an independent pin on the RIFF layout."""
+    an independent pin on the RIFF layout; a truncated file raises."""
     import io
     import wave
 
@@ -320,6 +320,10 @@ def test_wav_codec_roundtrip_and_stdlib_interop():
     w2.close()
     back, sr = mm.decode_wav(buf.getvalue())
     assert sr == 8000 and np.array_equal(back[:, 0], s)
+    # a data chunk cut short (a partial download) raises, never decodes
+    # a silently shortened body
+    with pytest.raises(ValueError, match="truncated RIFF chunk"):
+        mm.decode_wav(buf.getvalue()[:-10])
 
 
 def test_audio_features_match_naive_sample_stats(spark):

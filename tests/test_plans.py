@@ -191,9 +191,10 @@ def test_merge_flat_decode_plans(spark, corpus_df, tmp_path_factory):
 
 
 def test_merge_upsert_anti_join_broadcasts(spark, corpus_df, tmp_path_factory):
-    """The upsert anti-join against a small delta's doc-id set must be
-    a broadcast (map-side filter of the main side) — never a shuffle of
-    the main index's token-scale rows on doc_id."""
+    """The upsert anti-join against a small delta's doc-id set — alone
+    or unioned with same-pass tombstone ids — must be a broadcast
+    (map-side filter of the main side), never a shuffle of the main
+    index's token-scale rows on doc_id."""
     from pyspark.sql import functions as F
 
     from search_engine_spark.operators.index_build import Index, build_index
@@ -203,10 +204,15 @@ def test_merge_upsert_anti_join_broadcasts(spark, corpus_df, tmp_path_factory):
     db = str(tmp_path_factory.mktemp("idx_delta"))
     build_index(corpus_df.filter(F.col("doc_id") < 150)).save(da)
     build_index(corpus_df.filter(F.col("doc_id") >= 150)).save(db)
-    merged = merge_indexes(Index.load(spark, da), Index.load(spark, db))
-    plan = _plan(merged.postings)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert "SortMergeJoin" not in plan
+    main, delta = Index.load(spark, da), Index.load(spark, db)
+    dead = corpus_df.filter(F.col("doc_id") % 7 == 0).select("doc_id")
+    for merged in (
+        merge_indexes(main, delta),
+        merge_indexes(main, delta, deleted=dead),
+    ):
+        plan = _plan(merged.postings)
+        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+        assert "SortMergeJoin" not in plan
 
 
 def test_repo_link_graph_inter_repo_edges_distributed(spark, corpus_df):

@@ -223,12 +223,16 @@ def test_publish_flow_via_spark_submit(corpus_path, tmp_path):
     assert srv.n_docs == 120
 
 
-def test_merge_via_spark_submit(spark, corpus_path, tmp_path):
+def test_merge_via_spark_submit(
+    spark, corpus_path, tmp_path, monkeypatch, capsys
+):
     """Delta-merge flow: build main over part of the corpus, merge a
     delta built in-job from the remaining docs' parquet, and verify the
     merged index answers queries identically to a from-scratch build
     over the full corpus. Then compact the delta back out with
-    --delete-ids and check it equals the main build."""
+    --delete-ids and check it equals the main build. Last, the job's
+    delta + --delete-ids path runs in-process: one rebuild pass, the
+    deletes winning over their upserts."""
     from pyspark.sql import functions as F
 
     from search_engine_spark.config import EngineConfig
@@ -296,16 +300,60 @@ def test_merge_via_spark_submit(spark, corpus_path, tmp_path):
         ][-1]
     )
     assert rep2["n_docs"] == 80 and rep2["delete_ids"] == 40
-    compacted = Index.load(spark, compacted_out)
     main_only = Index.load(spark, main_idx)
     q = "banana recipe"
-    assert [
-        (r.doc_id, round(r.score, 9))
-        for r in search(compacted, q, k=10).collect()
-    ] == [
+    want = [
         (r.doc_id, round(r.score, 9))
         for r in search(main_only, q, k=10).collect()
     ]
+    assert [
+        (r.doc_id, round(r.score, 9))
+        for r in search(Index.load(spark, compacted_out), q, k=10).collect()
+    ] == want
+
+    # delta + deletes of every delta id in ONE job run, in-process so the
+    # rebuild passes can be counted (the job's closing stop() would end
+    # this test's session)
+    import importlib.util
+
+    from pyspark.sql import SparkSession
+
+    from search_engine_spark.operators import merge
+
+    spec = importlib.util.spec_from_file_location(
+        "merge_index_job", os.path.join(REPO, "jobs", "merge_index_job.py")
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    real_rebuild, passes = merge._incremental_rebuild, []
+
+    def counted(*args, **kwargs):
+        passes.append(1)
+        return real_rebuild(*args, **kwargs)
+
+    monkeypatch.setattr(merge, "_incremental_rebuild", counted)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    one_pass_out = str(tmp_path / "one_pass_idx")
+    monkeypatch.setattr(
+        sys,
+        "argv",
+        [
+            "merge_index_job.py",
+            "--main", main_idx,
+            "--delta-docs", delta_docs_p,
+            "--delete-ids", del_ids_p,
+            "--output", one_pass_out,
+        ],
+    )
+    capsys.readouterr()
+    job.main()
+    rep3 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert len(passes) == 1
+    assert rep3["n_docs"] == 80 and rep3["delta_n_docs"] == 40
+    assert [
+        (r.doc_id, round(r.score, 9))
+        for r in search(Index.load(spark, one_pass_out), q, k=10).collect()
+    ] == want
 
 
 def test_decontam_via_spark_submit(spark, corpus_path, tmp_path):
