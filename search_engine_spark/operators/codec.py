@@ -99,15 +99,36 @@ def encode_positions(pos_lists: list) -> bytes:
     return varint_encode(np.asarray(flat, dtype=np.uint64))
 
 
-def decode_positions(buf: bytes, n_postings: int) -> list:
+def decode_positions_csr(buf: bytes, n_postings: int) -> tuple:
+    """Decode ``n_postings`` position runs into CSR form: int64 offsets
+    (``n_postings + 1``) and one flat int32 positions array; posting
+    ``i`` holds ``positions[offsets[i]:offsets[i + 1]]``. Runs are
+    self-contained, so the concatenated blobs of several rows decode in
+    one call. Only the run headers are walked in Python; the prefix
+    sums are one vectorized pass."""
     vals = varint_decode(buf).astype(np.int64)
-    out = []
+    heads = np.empty(n_postings, dtype=np.int64)
     i = 0
-    for _ in range(n_postings):
-        n = int(vals[i]); i += 1
-        out.append(np.cumsum(vals[i : i + n]).tolist())
-        i += n
-    return out
+    for k in range(n_postings):
+        heads[k] = i
+        i += 1 + int(vals[i])
+    counts = vals[heads]
+    offsets = np.zeros(n_postings + 1, dtype=np.int64)
+    np.cumsum(counts, out=offsets[1:])
+    body = np.ones(vals.size, dtype=bool)
+    body[heads] = False
+    run = np.cumsum(vals[body])
+    # restart the prefix sum at each run: subtract the total before it
+    before = np.concatenate(([0], run))[offsets[:-1]]
+    return offsets, (run - np.repeat(before, counts)).astype(np.int32)
+
+
+def decode_positions(buf: bytes, n_postings: int) -> list:
+    """Per-posting position lists (Python ints) — the CSR decode, split."""
+    offsets, flat = decode_positions_csr(buf, n_postings)
+    flat = flat.tolist()
+    bounds = offsets.tolist()
+    return [flat[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
 
 
 def encode_tfs(tfs: np.ndarray) -> bytes:

@@ -383,12 +383,11 @@ def _incremental_rebuild(
     wins) and remove the ``deleted`` ids (a ``doc_id`` DataFrame or an
     id iterable) from both sides — a tombstone beats a same-set upsert.
     Then new globals, dirty/clean split, regroup/rescore, term_stats."""
+    n_dead = None
     if deleted is not None and not isinstance(deleted, DataFrame):
-        deleted = local_df(
-            a.postings.sparkSession,
-            [(int(i),) for i in deleted],
-            "doc_id long",
-        )
+        rows = [(int(i),) for i in deleted]
+        n_dead = len(rows)
+        deleted = local_df(a.postings.sparkSession, rows, "doc_id long")
     if deleted is not None:
         deleted = deleted.select("doc_id")
     drop_ids, small = deleted, False
@@ -396,11 +395,13 @@ def _incremental_rebuild(
         drop_ids = delta.doc_stats.select("doc_id")
         if deleted is not None:
             drop_ids = drop_ids.unionByName(deleted)
-        # the driver knows the delta's size and counts the tombstones (a
-        # delete list may be any size): broadcast the anti-joins only for
-        # a small change set, so the main side is filtered map-side
-        # (past ~2M ids Spark picks; AQE may still broadcast)
-        n_dead = deleted.count() if deleted is not None else 0
+        # the driver knows the delta's size and the length of an id list;
+        # only a tombstone DataFrame (any size) costs a count job:
+        # broadcast the anti-joins only for a small change set, so the
+        # main side is filtered map-side (past ~2M ids Spark picks; AQE
+        # may still broadcast)
+        if n_dead is None:
+            n_dead = deleted.count() if deleted is not None else 0
         small = delta.n_docs + n_dead <= 2_000_000
 
     def keep(df: DataFrame, ids: DataFrame | None) -> DataFrame:

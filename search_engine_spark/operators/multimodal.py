@@ -831,8 +831,9 @@ def _riff_walk(payload: bytes, pos: int, end: int, out: list) -> None:
 def decode_avi(payload: bytes) -> tuple[np.ndarray, int]:
     """RIFF AVI bytes -> ((n, h, w, 3) uint8 RGB frames, fps). Only
     the uncompressed 24-bit DIB 'vids' stream decodes — compressed
-    codecs (MJPEG/H.264/...) raise NotImplementedError, the documented
-    seam. The video stream's NUMBER is derived from its strl position
+    codecs (MJPEG/H.264/...) and fractional frame rates (NTSC
+    30000/1001) raise NotImplementedError, the documented seam. The
+    video stream's NUMBER is derived from its strl position
     (frame chunks are '{nn}db'/'{nn}dc'), so a file that muxes an
     audio stream before the video stream still decodes."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
@@ -858,6 +859,12 @@ def decode_avi(payload: bytes) -> tuple[np.ndarray, int]:
     if not dibs:
         raise ValueError("truncated AVI (no frame chunks)")
     scale, rate = struct.unpack_from("<II", strh, 20)
+    scale = max(scale, 1)
+    if rate % scale:
+        raise NotImplementedError(
+            f"fractional frame rate {rate}/{scale} — decode_avi returns "
+            f"an integer fps, so only whole-number rates are decoded here"
+        )
     _, w, h_signed, _, bpp, comp = struct.unpack_from("<IiiHHI", strf, 0)
     if bpp != 24 or comp != 0:
         raise NotImplementedError(
@@ -868,7 +875,7 @@ def decode_avi(payload: bytes) -> tuple[np.ndarray, int]:
     top_down = h_signed < 0
     h = -h_signed if top_down else h_signed
     frames = np.stack([_decode_dib(d, w, h, top_down) for d in dibs])
-    return frames, rate // max(scale, 1)
+    return frames, rate // scale
 
 
 def fake_avi_pixels(doc_id: int, frame: int, w: int, h: int) -> np.ndarray:

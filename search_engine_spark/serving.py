@@ -9,8 +9,12 @@ splits the system into (a) Spark building/merging the compact codec
 index at cluster scale and (b) a serving tier loading those SAME
 artifacts and answering queries from memory. This module is (b): it
 reads the parquet/codec artifacts written by ``Index.save`` with
-pyarrow (NO SparkSession anywhere on the query path), decodes postings
-lazily per term into numpy, and reproduces the engine's exact query
+pyarrow (NO SparkSession anywhere on the query path) and keeps the
+codec blobs in the Arrow buffers they were read into (no per-term
+Python objects). Postings decode lazily per term into numpy; positions
+decode only for phrase queries, into CSR arrays (int64 offsets + one
+flat int32 array); the phrase cache keeps only each phrase's matching
+doc ids. It reproduces the engine's exact query
 semantics — analyzer, boolean quirks Q4/Q5, phrase gap-3, BM25/TF-IDF
 scoring, 0.7/0.3 PageRank mix, Q6 tie-break — validated rank-identical
 to the Spark path by tests/test_serving.py.
@@ -35,6 +39,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import time
 from collections import OrderedDict
 
 import numpy as np
@@ -56,12 +61,78 @@ def _read_parquet(path: str, columns: list[str]):
     return pq.read_table(path, columns=columns)
 
 
+_BLOB_COLS = ("doc_ids_enc", "tf_enc", "bm25_tf_enc", "pos_enc")
+_NO_IDS = np.empty(0, np.int64)
+_NO_POSTINGS = (_NO_IDS, np.empty(0, np.float64), np.empty(0, np.float64))
+
+
+class _PostingBlobs:
+    """The codec blobs of a postings table, held in its Arrow buffers.
+
+    Rows are sorted by (term, shard), so one term's rows are contiguous
+    (``_starts[slot]:_starts[slot + 1]``) and in doc-id order. Each
+    binary column keeps its data buffer plus int64 offsets; a lookup
+    hands out ``memoryview`` slices, so no per-row Python object exists
+    until a term is decoded. ``len()`` is the number of terms."""
+
+    def __init__(self, table=None):
+        self._slot: dict[str, int] = {}
+        self._starts = np.zeros(1, np.int64)
+        self._cols: dict[str, tuple[np.ndarray, memoryview]] = {}
+        if table is None or table.num_rows == 0:
+            return
+        import pyarrow.compute as pc
+
+        t = table.sort_by(
+            [("term", "ascending"), ("shard", "ascending")]
+        ).combine_chunks()
+        terms = t.column("term").chunk(0)
+        first = np.ones(len(terms), bool)
+        first[1:] = pc.not_equal(terms[1:], terms[:-1]).to_numpy(
+            zero_copy_only=False
+        )
+        first = np.flatnonzero(first)
+        self._slot = dict(
+            zip(terms.take(first).to_pylist(), range(first.size))
+        )
+        self._starts = np.append(first, len(terms))
+        for name in _BLOB_COLS:
+            col = t.column(name).chunk(0)
+            _valid, offs, data = col.buffers()
+            off = np.frombuffer(
+                offs, np.int32, len(col) + 1, col.offset * 4
+            ).astype(np.int64)
+            self._cols[name] = (off, memoryview(data))
+
+    def __len__(self) -> int:
+        return len(self._slot)
+
+    def rows(self, term: str) -> range:
+        """Row numbers of ``term`` (empty for an unknown term)."""
+        i = self._slot.get(term)
+        if i is None:
+            return range(0)
+        return range(int(self._starts[i]), int(self._starts[i + 1]))
+
+    def blob(self, name: str, lo: int, hi: int) -> memoryview:
+        """The blobs of rows ``lo:hi`` in column ``name``, concatenated
+        (consecutive rows are contiguous in the data buffer)."""
+        off, data = self._cols[name]
+        return data[off[lo] : off[hi]]
+
+    @property
+    def nbytes(self) -> int:
+        return self._starts.nbytes + sum(
+            off.nbytes + data.nbytes for off, data in self._cols.values()
+        )
+
+
 class ServingIndex:
     """In-memory query server over a saved index directory."""
 
     def __init__(
         self,
-        enc_rows: dict,
+        enc_rows: "_PostingBlobs | dict",
         idf: dict,
         doc_ids: np.ndarray,
         doc_lens: np.ndarray,
@@ -71,7 +142,7 @@ class ServingIndex:
         page_rank: dict | None = None,
         cache_size: int = 1000,
     ):
-        self._enc = enc_rows          # term -> list[(ids_enc, tf_enc, bm_enc, pos_enc)]
+        self._enc = enc_rows or _PostingBlobs()  # {} = no postings
         self._idf = idf               # term -> idf
         self._doc_ids = doc_ids       # sorted
         self._doc_lens = doc_lens
@@ -79,17 +150,22 @@ class ServingIndex:
         self.avgdl = avgdl
         self.cfg = cfg
         self._pr = page_rank or {}
-        self._decoded: dict[str, tuple] = {}
+        self._decoded: dict[str, tuple] = {}  # term -> (ids, bm25, tfn)
+        self._pos: dict[str, tuple] = {}  # term -> (offsets, positions)
         # reference parity (QueryIndex.java:112,199-210,332): phrase
         # components are cached separately and UNBOUNDED, independent of
         # the 1000-entry LRU result cache — the reference's warm phrase
-        # regime never re-runs the gap-3 position scan. Dropped on
-        # refresh() along with the decode memo (generation swap).
-        self._phrase_cache: dict[str, dict] = {}
+        # regime never re-runs the gap-3 position scan. Only the sorted
+        # matching doc ids are kept; the per-stem rows are re-filtered
+        # from the decode memo. Dropped on refresh() along with the
+        # decode memo (generation swap).
+        self._phrase_cache: dict[str, np.ndarray] = {}
         self._cache: OrderedDict = OrderedDict()
         self._cache_size = cache_size
+        self.queries = 0
         self.cache_hits = 0
         self.cache_misses = 0
+        self.load_s: float | None = None  # wall of the last load
         # set by load_latest/refresh when serving a published root
         self.generation: int | None = None
         self._root: str | None = None
@@ -121,6 +197,7 @@ class ServingIndex:
         doc stats and meta are global (tiny) and load everywhere."""
         import dataclasses
 
+        t0 = time.perf_counter()
         pr_explicit = page_rank is not None
         meta_file = sorted(
             glob.glob(os.path.join(path, "meta", "part-*"))
@@ -157,17 +234,8 @@ class ServingIndex:
                 ["term", "shard", "doc_ids_enc", "tf_enc", "bm25_tf_enc",
                  "pos_enc"],
             )
-        terms = pt.column("term").to_pylist()
-        shards = pt.column("shard").to_pylist()
-        ids_e = pt.column("doc_ids_enc").to_pylist()
-        tf_e = pt.column("tf_enc").to_pylist()
-        bm_e = pt.column("bm25_tf_enc").to_pylist()
-        pos_e = pt.column("pos_enc").to_pylist()
-        enc_rows: dict[str, list] = {}
-        for t, sh, a, b, c, d in zip(terms, shards, ids_e, tf_e, bm_e, pos_e):
-            enc_rows.setdefault(t, []).append((sh, a, b, c, d))
-        for rows in enc_rows.values():
-            rows.sort(key=lambda r: r[0])  # shard order == doc-id order
+        blobs = _PostingBlobs(pt)
+        del pt
 
         ts = _read_parquet(os.path.join(path, "term_stats"), ["term", "idf"])
         idf = dict(
@@ -210,11 +278,12 @@ class ServingIndex:
                     if r is not None
                 }
         srv = cls(
-            enc_rows, idf, d_ids[order], d_len[order],
+            blobs, idf, d_ids[order], d_len[order],
             int(meta["n_docs"]), float(meta["avgdl"]), cfg,
             page_rank=page_rank,
         )
         srv._pr_explicit = pr_explicit
+        srv.load_s = time.perf_counter() - t0
         return srv
 
     @classmethod
@@ -255,89 +324,150 @@ class ServingIndex:
         # only an explicitly supplied PageRank map survives a generation
         # swap; an auto-armed one must re-arm from the NEW generation's
         # docs projection (else gen-K ranks would shadow gen K+1's)
-        fresh = ServingIndex.load_latest(
-            self._root,
-            page_rank=self._pr if self._pr_explicit else None,
+        self._swap(
+            ServingIndex.load_latest(
+                self._root,
+                page_rank=self._pr if self._pr_explicit else None,
+            )
         )
-        hits, misses = self.cache_hits, self.cache_misses
-        self.__dict__.update(fresh.__dict__)
-        self.cache_hits, self.cache_misses = hits, misses
         return True
+
+    def _swap(self, fresh: "ServingIndex") -> None:
+        """Take over ``fresh``'s state in place; the query counters stay
+        cumulative across generations."""
+        keep = (self.queries, self.cache_hits, self.cache_misses)
+        self.__dict__.update(fresh.__dict__)
+        self.queries, self.cache_hits, self.cache_misses = keep
+
+    def stats(self) -> dict:
+        """Serving counters as a plain dict: queries and result-cache
+        hits/misses (cumulative across generations), memo sizes, and
+        resident bytes (``nbytes`` sums) of the encoded blobs, the
+        decode memo, the CSR positions and the phrase cache."""
+        looked_up = self.cache_hits + self.cache_misses
+        return {
+            "queries": self.queries,
+            "cache_hits": self.cache_hits,
+            "cache_misses": self.cache_misses,
+            "cache_hit_ratio": (
+                self.cache_hits / looked_up if looked_up else 0.0
+            ),
+            "decoded_terms": len(self._decoded),
+            "position_terms": len(self._pos),
+            "phrase_cache_entries": len(self._phrase_cache),
+            "encoded_bytes": self._enc.nbytes,
+            "decoded_bytes": sum(
+                a.nbytes for t in self._decoded.values() for a in t
+            ),
+            "positions_bytes": sum(
+                a.nbytes for t in self._pos.values() for a in t
+            ),
+            "phrase_cache_bytes": sum(
+                d.nbytes for d in self._phrase_cache.values()
+            ),
+            "generation": self.generation,
+            "load_s": self.load_s,
+        }
 
     # -- postings ---------------------------------------------------------
 
     def _postings(self, term: str):
-        """(ids, bm25, tf_norm, positions) for one term, decoded lazily
-        and memoized. Ids arrive sorted (shard order)."""
+        """(ids, bm25, tf_norm) for one term, decoded lazily from the
+        Arrow-held blobs and memoized; positions are never touched here
+        (see ``_positions``). Ids arrive sorted (shard order)."""
         hit = self._decoded.get(term)
         if hit is not None:
             return hit
-        rows = self._enc.get(term)
-        if rows is None:
-            out = (
-                np.empty(0, np.int64), np.empty(0, np.float64),
-                np.empty(0, np.float64), [],
-            )
-            self._decoded[term] = out
-            return out
-        ids_l, bm_l, tf_l, pos_l = [], [], [], []
-        for _sh, a, b, c, d in rows:
-            ids = codec.delta_decode_ids(a)
-            ids_l.append(ids)
-            tf_l.append(codec.decode_tfs(b))
-            bm_l.append(codec.decode_tfs(c))
-            pos_l.extend(codec.decode_positions(d, ids.size))
-        ids = np.concatenate(ids_l)
-        tfs = np.concatenate(tf_l).astype(np.float64)
-        bms = np.concatenate(bm_l).astype(np.float64)
+        rows = self._enc.rows(term)
+        if not rows:
+            self._decoded[term] = _NO_POSTINGS
+            return _NO_POSTINGS
+        blob = self._enc.blob
+        ids = np.concatenate(
+            [codec.delta_decode_ids(blob("doc_ids_enc", r, r + 1))
+             for r in rows]
+        )
+        # float32 blobs of consecutive rows concatenate to one array
+        lo, hi = rows.start, rows.stop
+        tfs = codec.decode_tfs(blob("tf_enc", lo, hi)).astype(np.float64)
+        bms = codec.decode_tfs(blob("bm25_tf_enc", lo, hi)).astype(
+            np.float64
+        )
         dl = self._doc_lens[np.searchsorted(self._doc_ids, ids)]
         with np.errstate(divide="ignore", invalid="ignore"):
             tfn = np.where(dl > 0, tfs / dl, 0.0)
-        out = (ids, bms, tfn, pos_l)
+        out = (ids, bms, tfn)
         self._decoded[term] = out
+        return out
+
+    def _positions(self, term: str):
+        """(offsets, positions) CSR arrays for one term, aligned with
+        ``_postings(term)``'s ids: posting ``i``'s positions are
+        ``positions[offsets[i]:offsets[i + 1]]``. Decoded lazily — only
+        the phrase path asks — and memoized."""
+        hit = self._pos.get(term)
+        if hit is not None:
+            return hit
+        rows = self._enc.rows(term)
+        out = codec.decode_positions_csr(
+            self._enc.blob("pos_enc", rows.start, rows.stop) if rows else b"",
+            self._postings(term)[0].size,
+        )
+        self._pos[term] = out
         return out
 
     # -- query components -------------------------------------------------
 
+    def _phrase_docs(self, part: str, stems: list[str]) -> np.ndarray:
+        """Sorted doc ids the phrase ``part`` (analyzed to ``stems``)
+        matches: the gap-3 matcher over the docs holding every stem,
+        cached unbounded."""
+        hit = self._phrase_cache.get(part)
+        if hit is not None:
+            return hit
+        uniq = list(dict.fromkeys(stems))
+        cand = _NO_IDS
+        if uniq:
+            cand = self._postings(uniq[0])[0]
+            for s in uniq[1:]:
+                cand = np.intersect1d(
+                    cand, self._postings(s)[0], assume_unique=True
+                )
+        ok = []
+        if cand.size:
+            # per stem: positions CSR and each candidate's posting row
+            runs = []
+            for s in stems:
+                off, pos = self._positions(s)
+                at = np.searchsorted(self._postings(s)[0], cand)
+                runs.append((off[at].tolist(), off[at + 1].tolist(), pos))
+            gap = self.cfg.phrase_max_gap
+            for j, doc in enumerate(cand.tolist()):
+                pls = [sorted(pos[a[j] : b[j]].tolist()) for a, b, pos in runs]
+                if phrase_match(pls, gap):
+                    ok.append(doc)
+        docs = np.asarray(ok, dtype=np.int64) if ok else _NO_IDS
+        self._phrase_cache[part] = docs
+        return docs
+
     def _component(self, part: str) -> dict:
-        """term -> (ids, bm25, tf_norm) rows for one query component
-        (phrase components doc-filtered by the gap-3 matcher)."""
+        """term -> (ids, bm25, tf_norm) rows for one query component, in
+        a fresh dict. A phrase component's rows are its stems' decoded
+        postings filtered to the cached matching doc ids."""
         do_stem = self.cfg.stem
         if is_phrase(part):
-            hit = self._phrase_cache.get(part)
-            if hit is not None:
-                return hit
             stems = query_stems(strip_phrase(part), do_stem)
-            uniq = list(dict.fromkeys(stems))
-            if not uniq:
-                self._phrase_cache[part] = {}
-                return {}
-            per = {s: self._postings(s) for s in uniq}
-            cand = per[uniq[0]][0]
-            for s in uniq[1:]:
-                cand = np.intersect1d(cand, per[s][0], assume_unique=True)
-            ok = []
-            for doc in cand:
-                pls = []
-                for s in stems:
-                    ids, _, _, pos = per[s]
-                    pls.append(
-                        sorted(pos[int(np.searchsorted(ids, doc))])
-                    )
-                if phrase_match(pls, self.cfg.phrase_max_gap):
-                    ok.append(int(doc))
-            okset = np.asarray(ok, dtype=np.int64)
+            docs = self._phrase_docs(part, stems)
             out = {}
-            for s in uniq:
-                ids, bm, tfn, _ = per[s]
-                m = np.isin(ids, okset, assume_unique=True)
+            for s in dict.fromkeys(stems):
+                ids, bm, tfn = self._postings(s)
+                m = np.isin(ids, docs, assume_unique=True)
                 out[s] = (ids[m], bm[m], tfn[m])
-            self._phrase_cache[part] = out
             return out
         stems = list(dict.fromkeys(query_stems(part, do_stem)))
         out = {}
         for s in stems:
-            ids, bm, tfn, _ = self._postings(s)
+            ids, bm, tfn = self._postings(s)
             if ids.size:
                 out[s] = (ids, bm, tfn)
         return out
@@ -358,13 +488,10 @@ class ServingIndex:
         """Top-k [(doc_id, rel, page_rank, score)] — rank-identical to
         ``operators.query.search`` (pinned by tests/test_serving.py)."""
         k = k or self.cfg.topk_default
+        self.queries += 1
         op, left, right = detect_operator(query)
         comp = self._component(left)
         if op == "OR":
-            # _component may return the dict object stored in the
-            # unbounded phrase cache (phrase on the LEFT of OR) — merge
-            # into a fresh dict so the union never pollutes the cache
-            comp = dict(comp)
             rm = self._component(right)
             # quirk Q5 union: (doc, term) pairs merge; values identical
             # per pair, so a per-term id-union suffices
@@ -580,6 +707,7 @@ class ServingIndex:
         hit = self._cache.get(key)
         if hit is not None:
             self._cache.move_to_end(key)
+            self.queries += 1
             self.cache_hits += 1
             return list(hit)  # copy: callers must not mutate the cache
         self.cache_misses += 1
@@ -597,10 +725,11 @@ class ServingRouter(ServingIndex):
     ``term_range`` parquet filter — row-group pruned), the router owns
     the query semantics. Composition is by TERM ROUTING, not result
     merging: the router IS a ``ServingIndex`` whose ``_postings(term)``
-    delegates to the owning shard, so every quirk (boolean Q4/Q5,
-    phrase gap-3, Q6 tie-break, LRU + unbounded phrase cache) is the
-    inherited single-node code path and rank-identity holds by
-    construction (pinned in tests/test_serving_router.py).
+    and ``_positions(term)`` delegate to the owning shard, so every
+    quirk (boolean Q4/Q5, phrase gap-3, Q6 tie-break, LRU + unbounded
+    phrase cache) is the inherited single-node code path and
+    rank-identity holds by construction (pinned in
+    tests/test_serving_router.py).
 
     In a real fleet ``_postings`` becomes an RPC to the shard node and
     per-term partial scores come back instead of raw postings for
@@ -645,25 +774,31 @@ class ServingRouter(ServingIndex):
         """Split the saved index's vocabulary into ``n_shards``
         contiguous equal-count term ranges and load one ServingIndex
         per range (each reads only its postings rows)."""
+        t0 = time.perf_counter()
         ts = _read_parquet(os.path.join(path, "term_stats"), ["term"])
         terms = sorted(ts.column("term").to_pylist())
         if not terms:
-            return cls([ServingIndex.load(path, page_rank=page_rank)])
-        n_shards = max(1, min(n_shards, len(terms)))
-        cut_idx = [
-            (i * len(terms)) // n_shards for i in range(1, n_shards)
-        ]
-        cuts = [terms[i] for i in cut_idx]
-        bounds = [None, *cuts]
-        shards = [
-            ServingIndex.load(
-                path,
-                page_rank=page_rank,
-                term_range=(bounds[i], cuts[i] if i < len(cuts) else None),
-            )
-            for i in range(n_shards)
-        ]
-        return cls(shards)
+            shards = [ServingIndex.load(path, page_rank=page_rank)]
+        else:
+            n_shards = max(1, min(n_shards, len(terms)))
+            cut_idx = [
+                (i * len(terms)) // n_shards for i in range(1, n_shards)
+            ]
+            cuts = [terms[i] for i in cut_idx]
+            bounds = [None, *cuts]
+            shards = [
+                ServingIndex.load(
+                    path,
+                    page_rank=page_rank,
+                    term_range=(
+                        bounds[i], cuts[i] if i < len(cuts) else None
+                    ),
+                )
+                for i in range(n_shards)
+            ]
+        r = cls(shards)
+        r.load_s = time.perf_counter() - t0
+        return r
 
     @classmethod
     def load_latest(
@@ -700,25 +835,36 @@ class ServingRouter(ServingIndex):
         ptr = read_latest(self._root)
         if ptr is None or ptr["generation"] == self.generation:
             return False
-        fresh = ServingRouter.load_latest(
-            self._root,
-            n_shards=self._n_shards,
-            page_rank=self._pr if self._pr_explicit else None,
+        self._swap(
+            ServingRouter.load_latest(
+                self._root,
+                n_shards=self._n_shards,
+                page_rank=self._pr if self._pr_explicit else None,
+            )
         )
-        hits, misses = self.cache_hits, self.cache_misses
-        self.__dict__.update(fresh.__dict__)
-        self.cache_hits, self.cache_misses = hits, misses
         return True
 
-    def _postings(self, term: str):
-        hit = self._decoded.get(term)
-        if hit is not None:
-            return hit
+    def _shard(self, term: str) -> ServingIndex:
         import bisect
 
         # _cuts[i] = shard i's max term: bisect_left sends a term equal
         # to a shard's max INTO that shard, anything beyond to the next
         i = bisect.bisect_left(self._cuts, term)
-        out = self._shards[min(i, len(self._shards) - 1)]._postings(term)
-        self._decoded[term] = out
+        return self._shards[min(i, len(self._shards) - 1)]
+
+    def _postings(self, term: str):
+        hit = self._decoded.get(term)
+        if hit is None:
+            hit = self._decoded[term] = self._shard(term)._postings(term)
+        return hit
+
+    def _positions(self, term: str):
+        hit = self._pos.get(term)
+        if hit is None:
+            hit = self._pos[term] = self._shard(term)._positions(term)
+        return hit
+
+    def stats(self) -> dict:
+        out = super().stats()
+        out["encoded_bytes"] = sum(sh._enc.nbytes for sh in self._shards)
         return out

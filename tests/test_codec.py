@@ -101,10 +101,19 @@ def test_prop_tfs_roundtrip_float32(tfs):
 def test_prop_positions_roundtrip(pls):
     from search_engine_spark.operators.codec import (
         decode_positions,
+        decode_positions_csr,
         encode_positions,
     )
 
     # positions are stored sorted ascending per posting (build sorts)
     pls = [sorted(p) for p in pls]
-    out = decode_positions(encode_positions(pls), len(pls))
+    buf = encode_positions(pls)
+    out = decode_positions(buf, len(pls))
     assert [list(map(int, p)) for p in out] == pls
+    # the CSR form holds exactly the same runs
+    offsets, flat = decode_positions_csr(buf, len(pls))
+    assert offsets.dtype == np.int64 and flat.dtype == np.int32
+    assert offsets.size == len(pls) + 1 and offsets[-1] == flat.size
+    assert [
+        flat[a:b].tolist() for a, b in zip(offsets[:-1], offsets[1:])
+    ] == out

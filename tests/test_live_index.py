@@ -149,9 +149,21 @@ def test_cdc_tombstones_compact_deletions(spark, tmp_path, monkeypatch):
         return real_rebuild(*args, **kwargs)
 
     monkeypatch.setattr(merge, "_incremental_rebuild", counted)
+    # the handler hands the rebuild a Python id list, whose length the
+    # driver already holds: no count() job for the broadcast gate
+    frame_cls = type(dead)
+    real_count, counts = frame_cls.count, []
+
+    def count_spy(self):
+        counts.append(1)
+        return real_count(self)
+
+    monkeypatch.setattr(frame_cls, "count", count_spy)
     live._handle_batch(dead.unionByName(recrawl).unionByName(arrivals),
                        777)
+    monkeypatch.setattr(frame_cls, "count", real_count)
     assert len(passes) == 1
+    assert counts == []
 
     # tombstones hit only base ids (< 200); %10==0 arrivals survive
     tombstoned = (

@@ -659,6 +659,28 @@ def test_avi_foreign_variants():
         mm.decode_avi(comp)
 
 
+def test_avi_fractional_rate_raises():
+    """A spec-valid fractional rate (NTSC 30000/1001) has no integer
+    fps: decode_avi raises the seam error instead of truncating to 29;
+    a whole-number rate over a non-unit scale (30/2) still decodes."""
+    import struct as st
+
+    import numpy as np
+
+    fr = np.stack([mm.fake_avi_pixels(3, f, 8, 8) for f in range(2)])
+    ref = mm.encode_avi(fr, 15)
+    # dwScale, dwRate sit at strh body offset 20
+    at = ref.index(b"strh") + 8 + 20
+
+    def with_rate(scale, rate):
+        return ref[:at] + st.pack("<II", scale, rate) + ref[at + 8 :]
+
+    with pytest.raises(NotImplementedError, match="30000/1001"):
+        mm.decode_avi(with_rate(1001, 30000))
+    back, fps = mm.decode_avi(with_rate(2, 30))
+    assert fps == 15 and np.array_equal(back, fr)
+
+
 def test_sample_frames_stub_fallback_for_undecodable_avi(spark):
     """A compressed (undecodable) AVI row must NOT fail the stage:
     sample_frames falls back to the byte-slice stub its docstring

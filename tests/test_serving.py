@@ -111,14 +111,20 @@ def test_serving_latency_and_cache(saved):
 def test_serving_phrase_component_cache(saved, monkeypatch):
     """Reference parity (QueryIndex.java:112,199-210,332): phrase
     components are cached unbounded, separate from the LRU — a warm
-    phrase query never re-runs the gap-3 position scan."""
+    phrase query never re-runs the gap-3 position scan. The cache holds
+    only each phrase's sorted matching doc ids."""
+    import numpy as np
+
     import search_engine_spark.serving as serving_mod
 
     d, _idx, _docs = saved
     srv = ServingIndex.load(d)
     q = '"banana recipe"'
     first = srv.search(q, k=10)
-    assert srv._phrase_cache  # populated by the first evaluation
+    docs = srv._phrase_cache[q]  # populated by the first evaluation
+    assert docs.dtype == np.int64 and docs.size
+    assert np.array_equal(docs, np.unique(docs))
+    assert {doc for doc, *_ in first} <= set(docs.tolist())
 
     def boom(*_a, **_k):  # pragma: no cover - should never run
         raise AssertionError("phrase matcher re-ran on a cached phrase")
@@ -311,11 +317,77 @@ def test_or_phrase_left_does_not_pollute_phrase_cache(saved):
     component INTO the dict object stored in the unbounded phrase
     cache, so '"p" OR x' permanently contaminated later bare '"p"'
     queries with x's docs. The union must build a fresh dict."""
+    import numpy as np
+
     d, _idx, _docs = saved
-    baseline = ServingIndex.load(d).search('"banana recipe"', k=10)
+    clean = ServingIndex.load(d)
+    baseline = clean.search('"banana recipe"', k=10)
     srv = ServingIndex.load(d)
     srv.search('"banana recipe" OR spark', k=10)
     assert srv.search('"banana recipe"', k=10) == baseline
-    # the cached component itself must hold only the phrase's stems
-    comp = srv._phrase_cache['"banana recipe"']
-    assert set(comp) <= {"banana", "recip"}
+    # the cached doc set must be the phrase's own, none of spark's docs
+    assert np.array_equal(
+        srv._phrase_cache['"banana recipe"'],
+        clean._phrase_cache['"banana recipe"'],
+    )
+    assert list(srv._phrase_cache) == ['"banana recipe"']
+
+
+def test_positions_decoded_only_for_phrase_stems(saved, monkeypatch):
+    """Term, multi-term and boolean queries never decode positions; a
+    phrase query decodes them for its own stems and nothing else."""
+    import search_engine_spark.serving as serving_mod
+
+    d, _idx, _docs = saved
+    srv = ServingIndex.load(d)
+    real = serving_mod.codec.decode_positions_csr
+
+    def boom(*_a, **_k):
+        raise AssertionError("positions decoded for a non-phrase query")
+
+    monkeypatch.setattr(serving_mod.codec, "decode_positions_csr", boom)
+    for q in ["banana", "banana recipe", "banana AND recipe",
+              "banana OR recipe", "banana NOT recipe", "spark NOT banana"]:
+        assert srv.search(q, k=10), q
+    assert srv._pos == {}
+
+    calls = []
+
+    def counted(buf, n):
+        calls.append(n)
+        return real(buf, n)
+
+    monkeypatch.setattr(serving_mod.codec, "decode_positions_csr", counted)
+    srv.search('"banana recipe" AND spark', k=10)
+    assert set(srv._pos) == {"banana", "recip"} and len(calls) == 2
+    # each CSR run count matches the term's decoded postings
+    assert [srv._postings(t)[0].size for t in ("banana", "recip")] == calls
+
+
+def test_serving_stats(saved):
+    """stats(): a plain dict of counters, memo sizes and resident bytes;
+    within one generation every count and byte total only grows."""
+    d, _idx, _docs = saved
+    srv = ServingIndex.load(d)
+    st = srv.stats()
+    assert set(st) == {
+        "queries", "cache_hits", "cache_misses", "cache_hit_ratio",
+        "decoded_terms", "position_terms", "phrase_cache_entries",
+        "encoded_bytes", "decoded_bytes", "positions_bytes",
+        "phrase_cache_bytes", "generation", "load_s",
+    }
+    assert st["queries"] == 0 and st["decoded_bytes"] == 0
+    assert st["encoded_bytes"] > 0 and st["load_s"] > 0
+    assert st["generation"] is None
+    grow = [k for k in st if k not in ("cache_hit_ratio", "generation",
+                                       "load_s")]
+    for n, q in enumerate(QUERY_SET + QUERY_SET[:4], start=1):
+        srv.cached_search(q, k=10)
+        nxt = srv.stats()
+        assert all(nxt[k] >= st[k] for k in grow), q
+        assert nxt["queries"] == n, q
+        st = nxt
+    assert st["cache_hits"] == 4 and st["cache_misses"] == len(QUERY_SET)
+    assert st["cache_hit_ratio"] == 4 / (len(QUERY_SET) + 4)
+    assert st["phrase_cache_entries"] > 0 and st["positions_bytes"] > 0
+    assert st["decoded_terms"] >= st["position_terms"] > 0
