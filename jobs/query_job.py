@@ -9,8 +9,8 @@ Prints one JSON line per query: {"query": ..., "results": [[doc_id,
 score], ...], "sec": ...}. --wand uses the block-max WAND path
 (rank-identical for plain disjunctive queries; boolean/phrase queries
 automatically use the exhaustive path). --batch evaluates ALL --query
-flags through the shared-scan batch evaluator (one posting scan + one
-Spark job for the whole set — the reference-query-set shape at scale).
+flags in the one batch evaluator (``search_batch``: one plan and one
+decoded posting scan for the whole set, duplicates evaluated once).
 """
 
 from __future__ import annotations

@@ -66,13 +66,6 @@ class EngineConfig:
 
     # --- misc ---
     topk_default: int = 10
-    # search_many → search_batch cost dispatch: above this many distinct
-    # queries the O(N)-branch union plan (Catalyst planning cost + one
-    # driver-side collect) loses to the single queries-as-data plan.
-    # Measured crossover is well under 32 on local[32]; the constant is
-    # conservative so the 7-query interactive bench keeps the low-latency
-    # union shape.
-    batch_dispatch_threshold: int = 32
     extra: dict = field(default_factory=dict, hash=False, compare=False)
 
 

@@ -585,9 +585,10 @@ BATCH_QUERIES = [" ".join(BM25_TERMS), "scan AND batch", "scan OR batch"]
 
 
 def q_search_batched(spark, sf_dir):
-    """Batched evaluation (one shared posting scan for the whole set) —
-    must be value-identical to the per-query results, so its oracle is
-    the UNION ALL of the per-query SQL."""
+    """Batched evaluation through ``search_many``, the thin front for
+    the one batch evaluator ``search_batch`` — must be value-identical to
+    the per-query results, so its oracle is the UNION ALL of the
+    per-query SQL."""
     from search_engine_spark.operators.query import search_many
 
     idx = get_index(spark, sf_dir)

@@ -15,6 +15,12 @@ Plan shape for one query (SURVEY.md §3.1 "Spark shape"):
                                             # TakeOrderedAndProject — no
                                             # global sort materialization
 
+Many queries at once go through ONE evaluator, ``search_batch``: the
+batch is data (broadcast (query, term) rows joined to one decoded scan of
+the union of the queries' stems), not one plan branch per query.
+``search_many`` is a thin front for it that re-expands duplicate query
+strings per occurrence.
+
 Quirk fidelity (SURVEY.md §2.9): AND keeps left's tf/idf (Q4), OR merge
 right-wins per term + max pagerank (Q5), tie-break score DESC doc_id ASC
 (Q6), phrase gap-3 chained-walk matcher (Q8), single boolean operator (Q9).
@@ -23,7 +29,6 @@ right-wins per term + max pagerank (Q5), tie-break score DESC doc_id ASC
 from __future__ import annotations
 
 import os
-from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -54,10 +59,7 @@ _DECODED_SCHEMA = T.StructType(
 )
 
 
-def term_matches(
-    index: Index, stems: list[str], base: DataFrame | None = None,
-    shard_filter: DataFrame | None = None,
-) -> DataFrame:
+def term_matches(index: Index, stems: list[str]) -> DataFrame:
     """Q4 posting lookup: (doc_id, term, tf, tf_norm, bm25_tf, positions)
     rows for the query stems.
 
@@ -69,23 +71,10 @@ def term_matches(
         float32 binaries in an Arrow UDF, then reconstruct ``tf_norm``
         (= tf / doc_len, not separately encoded) from doc_stats.
 
-    ``base``: an already-decoded matches DataFrame (MATCH_COLS) covering
-    a superset of ``stems`` — the batch path (``search_many``) decodes
-    the union of all queries' terms ONCE and every per-query plan
-    filters that shared, persisted scan instead of re-reading parquet.
-
-    ``shard_filter``: optional one-column (shard) whitelist, broadcast
-    semi-joined against the posting BLOCK rows before any decode —
-    callers whose semantics bound candidates to a shard subset (phrase:
-    a match needs ALL stems, and shard = doc_id // docs_per_shard is
-    aligned across terms) prune whole codec blocks this way instead of
-    decoding then discarding rows.
+    ``search_batch`` calls it once with the union of a batch's stems and
+    joins every query's terms against that one decoded scan.
     """
-    if base is not None:
-        return base.filter(F.col("term").isin(list(stems)))
     rows = index.postings.filter(F.col("term").isin(list(stems)))
-    if shard_filter is not None:
-        rows = rows.join(F.broadcast(shard_filter), "shard", "left_semi")
     if index.cfg.store_arrays:
         return rows.select(
             "term", F.explode("postings").alias("p")
@@ -148,9 +137,7 @@ def term_matches(
     )
 
 
-def term_doc_ids(
-    index: Index, stems: list[str], base: DataFrame | None = None
-) -> DataFrame:
+def term_doc_ids(index: Index, stems: list[str]) -> DataFrame:
     """Ids-only posting lookup for AND/NOT probe sides: quirk Q4 keeps
     the LEFT side's term data regardless, so the right component only
     ever contributes a doc-id set. Decoding tf/bm25/positions for it
@@ -162,8 +149,6 @@ def term_doc_ids(
       * ``store_arrays=False``: an Arrow stage over just the
         ``doc_ids_enc`` binary (delta+varint decode; tf/bm25/pos codecs
         untouched, and column pruning keeps them out of the scan)."""
-    if base is not None:
-        return base.filter(F.col("term").isin(list(stems))).select("doc_id")
     rows = index.postings.filter(F.col("term").isin(list(stems)))
     if index.cfg.store_arrays:
         return rows.select(F.explode("postings.doc_id").alias("doc_id"))
@@ -190,64 +175,48 @@ def term_doc_ids(
     )
 
 
-def component_doc_ids(
-    index: Index, part: str, base: DataFrame | None = None
-) -> DataFrame:
+def component_doc_ids(index: Index, part: str) -> DataFrame:
     """Doc-id set of one query component — the AND/NOT probe side.
     Phrase components still need positions (gap check), so they take the
     full decode; term components take the ids-only path."""
     do_stem = index.cfg.stem
     if is_phrase(part):
         return phrase_matches(
-            index, query_stems(strip_phrase(part), do_stem), base=base
+            index, query_stems(strip_phrase(part), do_stem)
         ).select("doc_id")
-    return term_doc_ids(index, query_stems(part, do_stem), base=base)
+    return term_doc_ids(index, query_stems(part, do_stem))
 
 
-def _make_phrase_udf(stems: list[str], max_gap: int):
-    """Vectorized wrapper over the quirk-Q8 matcher. ``plists`` arrives as
-    one array<struct<term, positions>> per candidate doc."""
-    from search_engine_spark.oracle import phrase_match
+def phrase_matches(index: Index, stems: list[str]) -> DataFrame:
+    """Q6-Q8: docs containing ALL stems (the reference's HAVING count = n
+    subquery, QueryIndex.java:225-229) that pass the gap-3 positional
+    check, as MATCH_COLS rows for every stem of every surviving doc.
 
-    order = list(stems)
+    The candidate intersection and the gap check run in ONE
+    applyInPandas per shard over the posting BLOCK rows. Shards are
+    doc-id ranges aligned across terms (shard = doc_id // docs_per_shard,
+    index_build.py), so a shard's blocks hold every posting a candidate
+    in it can have. The codec binaries are present in BOTH physical
+    layouts (POSTINGS_SCHEMA always carries them), so the only exchange
+    is the block rows themselves (n_stems × n_shards rows ≈ the stems'
+    compressed postings), per-task memory is bounded by docs_per_shard,
+    and per-doc position arrays never shuffle. Only the survivors
+    (broadcast) join doc_stats for tf_norm. The matcher is the same
+    quirk-Q8 ``oracle.phrase_match`` chained walk.
 
-    @pandas_udf(T.BooleanType())
-    def phrase_ok(plists: pd.Series) -> pd.Series:
-        out = []
-        for entries in plists:
-            by_term = {e["term"]: sorted(e["positions"]) for e in entries}
-            pls = [by_term.get(s, []) for s in order]
-            out.append(phrase_match(pls, max_gap))
-        return pd.Series(out)
-
-    return phrase_ok
-
-
-def _phrase_matches_cogrouped(
-    index: Index, stems: list[str], uniq: list[str],
-    shard_filter: DataFrame | None,
-) -> DataFrame:
-    """Per-shard cogrouped phrase match over the posting BLOCK rows.
-
-    The old shape decoded every stem's postings into per-doc rows, wide-
-    exchanged ALL of them (positions included) through a
-    groupBy(doc_id).collect_list, and gap-checked afterwards — at 8M
-    docs a two-wide-stem phrase shuffled ~10M nested position arrays to
-    find its candidates. Shards are doc-id ranges aligned across terms
-    (index_build.py), so the intersection + gap check can instead run
-    INSIDE one applyInPandas per shard over the codec binaries (present
-    in BOTH physical layouts — POSTINGS_SCHEMA always carries them):
-    the only exchange is the block rows themselves (n_stems × n_shards
-    rows ≈ the stems' compressed postings), per-task memory is bounded
-    by docs_per_shard, and only SURVIVORS join doc_stats for tf_norm.
-    Semantics are byte-identical: candidates = docs holding ALL stems
-    (reference HAVING count = n, QueryIndex.java:225-229), matcher =
-    the same quirk-Q8 ``oracle.phrase_match`` chained walk."""
+    With two or more distinct stems, a broadcast shard whitelist prunes
+    the blocks first: only shards where EVERY stem has a posting block
+    can hold a candidate. The whitelist aggregates block rows
+    (≤ n_terms × n_shards rows, never entries), so a stem absent from
+    the index (reference: empty phrase result) zeroes it and the
+    positions codec never runs, and a rare-stem phrase decodes only the
+    rare stem's shards."""
     import numpy as np
 
     from search_engine_spark.operators import codec
     from search_engine_spark.oracle import phrase_match
 
+    uniq = list(dict.fromkeys(stems))
     n_uniq = len(uniq)
     order = list(stems)
     max_gap = index.cfg.phrase_max_gap
@@ -264,11 +233,16 @@ def _phrase_matches_cogrouped(
         if has_arrays
         else [F.col("tf_enc"), F.col("bm25_tf_enc")]
     )
-    blocks = index.postings.filter(F.col("term").isin(uniq)).select(
-        "term", "shard", "doc_ids_enc", "pos_enc", *val_cols
-    )
-    if shard_filter is not None:
-        blocks = blocks.join(F.broadcast(shard_filter), "shard", "left_semi")
+    rows = index.postings.filter(F.col("term").isin(uniq))
+    blocks = rows.select("term", "shard", "doc_ids_enc", "pos_enc", *val_cols)
+    if n_uniq > 1:
+        shards = (
+            rows.groupBy("shard")
+            .agg(F.countDistinct("term").alias("nt"))
+            .filter(F.col("nt") == F.lit(n_uniq))
+            .select("shard")
+        )
+        blocks = blocks.join(F.broadcast(shards), "shard", "left_semi")
 
     def check(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -331,10 +305,10 @@ def _phrase_matches_cogrouped(
                 out["positions"].append(pos[i])
         return pd.DataFrame(out)
 
-    decoded = blocks.groupBy("shard").applyInPandas(
+    survivors = blocks.groupBy("shard").applyInPandas(
         check, schema=_DECODED_SCHEMA
     )
-    return decoded.join(index.doc_stats, "doc_id").select(
+    return F.broadcast(survivors).join(index.doc_stats, "doc_id").select(
         "doc_id",
         "term",
         "tf",
@@ -343,64 +317,6 @@ def _phrase_matches_cogrouped(
         ).otherwise(F.lit(0.0)).alias("tf_norm"),
         "bm25_tf",
         "positions",
-    )
-
-
-def phrase_matches(
-    index: Index, stems: list[str], base: DataFrame | None = None
-) -> DataFrame:
-    """Q6-Q8: candidate docs containing ALL stems (countDistinct == n,
-    the reference's HAVING-subquery shape, QueryIndex.java:225-229), then
-    the gap-3 positional check as an Arrow UDF over nested position
-    arrays — positions never explode into rows (vs the reference's
-    row-per-position WordPositions table).
-
-    Block-level prune before the decode: a phrase candidate contains
-    ALL stems, and the posting layout shards by doc range
-    (shard = doc_id // docs_per_shard, aligned across terms —
-    index_build.py module doc), so only shards where EVERY stem has a
-    posting block can contribute. The whitelist is an aggregation over
-    posting BLOCK rows (≤ n_terms × n_shards rows, never entries) and
-    is broadcast — a stem absent from the index (reference: empty
-    phrase result, QueryIndex.java HAVING count = n) zeroes it and the
-    positions codec never runs; a rare-stem phrase decodes only the
-    rare stem's shards. At 8M docs the empty-stem case drops from the
-    full wide-term positions decode (~8 s) to the block-row scan."""
-    uniq = list(dict.fromkeys(stems))
-    shard_filter = None
-    if base is None and len(uniq) > 1:
-        blocks = index.postings.filter(F.col("term").isin(uniq))
-        shard_filter = (
-            blocks.groupBy("shard")
-            .agg(F.countDistinct("term").alias("nt"))
-            .filter(F.col("nt") == F.lit(len(uniq)))
-            .select("shard")
-        )
-        return _phrase_matches_cogrouped(index, stems, uniq, shard_filter)
-    rows = term_matches(index, uniq, base=base, shard_filter=shard_filter)
-    # collect the FULL match entries in the one candidate groupBy and
-    # explode the survivors back out: the old shape semi-joined `rows`
-    # against the gated candidates, which evaluated the codec decode
-    # TWICE (once per plan branch) — this is one decode, one exchange
-    entry = F.struct("term", "tf", "tf_norm", "bm25_tf", "positions")
-    cand = (
-        rows.groupBy("doc_id")
-        .agg(
-            F.countDistinct("term").alias("n_terms"),
-            F.collect_list(entry).alias("plists"),
-        )
-        .filter(F.col("n_terms") == len(uniq))
-    )
-    ok = cand.filter(
-        _make_phrase_udf(stems, index.cfg.phrase_max_gap)(F.col("plists"))
-    )
-    return ok.select("doc_id", F.explode("plists").alias("e")).select(
-        "doc_id",
-        F.col("e.term").alias("term"),
-        F.col("e.tf").alias("tf"),
-        F.col("e.tf_norm").alias("tf_norm"),
-        F.col("e.bm25_tf").alias("bm25_tf"),
-        F.col("e.positions").alias("positions"),
     )
 
 
@@ -439,31 +355,25 @@ def combine_or(left: DataFrame, right: DataFrame) -> DataFrame:
     )
 
 
-def component_matches(
-    index: Index, part: str, base: DataFrame | None = None
-) -> DataFrame:
+def component_matches(index: Index, part: str) -> DataFrame:
     do_stem = index.cfg.stem  # query analyzer mirrors the index analyzer
     if is_phrase(part):
         return phrase_matches(
-            index, query_stems(strip_phrase(part), do_stem), base=base
+            index, query_stems(strip_phrase(part), do_stem)
         )
-    return term_matches(index, query_stems(part, do_stem), base=base)
+    return term_matches(index, query_stems(part, do_stem))
 
 
-def _query_matches(
-    index: Index, query: str, base: DataFrame | None = None
-) -> DataFrame:
+def _query_matches(index: Index, query: str) -> DataFrame:
     """Parse + component lookup + boolean combine for one query string —
     shared by search / search_paged / total_count."""
     op, left, right = detect_operator(query)
-    matches = component_matches(index, left, base=base)
+    matches = component_matches(index, left)
     if op == "OR":
-        matches = combine_or(
-            matches, component_matches(index, right, base=base)
-        )
+        matches = combine_or(matches, component_matches(index, right))
     elif op in ("AND", "NOT"):
         # probe side: ids-only lookup (quirk Q4 discards its term data)
-        ids = component_doc_ids(index, right, base=base)
+        ids = component_doc_ids(index, right)
         matches = (combine_and if op == "AND" else combine_not)(
             matches, ids
         )
@@ -471,8 +381,8 @@ def _query_matches(
 
 
 def query_terms_needed(index: Index, query: str) -> list[str]:
-    """Every stem any component of ``query`` will look up — the unit the
-    batch path unions across queries for its single shared scan."""
+    """Every stem any component of ``query`` will look up — the unit
+    ``search_batch`` unions across queries for its one decoded scan."""
     op, left, right = detect_operator(query)
     parts = [left] + ([right] if op is not None else [])
     stems: list[str] = []
@@ -572,26 +482,23 @@ def score_matches(
     mode: str = "bm25",
     page_rank: DataFrame | None = None,
     stems: list[str] | None = None,
-    idf_map: dict[str, float] | None = None,
 ) -> DataFrame:
     """R1-R4: per-doc relevance Σ idf·w(tf) + 0.7/0.3 PageRank mix.
 
     IDF attachment, fastest to slowest path:
-      * ``idf_map`` given (or ``stems`` known → one tiny driver lookup
-        on the persisted term_stats, the reference's IN-probe): idf is a
-        LITERAL map expression — zero joins, zero broadcast exchange in
-        the scoring job. This mirrors the reference's denormalized-IDF
-        design (IDF rides next to the posting, SQLiteSearcher.java).
+      * ``stems`` known → one tiny driver lookup on the persisted
+        term_stats (the reference's IN-probe); idf is a LITERAL map
+        expression — zero joins, zero broadcast exchange in the scoring
+        job. This mirrors the reference's denormalized-IDF design (IDF
+        rides next to the posting, SQLiteSearcher.java).
       * fallback: broadcast semi-join against term_stats (used when the
         caller hands a matches frame with unknown terms).
     A term absent from term_stats has no postings either, so the literal
     map and the inner join keep exactly the same rows."""
-    if idf_map is None and stems:
-        idf_map = _idf_map(index, stems)
-    if idf_map is not None:
-        weighted = matches.withColumn("idf", _idf_literal(idf_map)).where(
-            F.col("idf").isNotNull()
-        )
+    if stems:
+        weighted = matches.withColumn(
+            "idf", _idf_literal(_idf_map(index, stems))
+        ).where(F.col("idf").isNotNull())
     else:
         idf = F.broadcast(
             index.term_stats.select("term", "idf").join(
@@ -614,20 +521,16 @@ def search(
     k: int | None = None,
     mode: str = "bm25",
     page_rank: DataFrame | None = None,
-    base: DataFrame | None = None,
-    idf_map: dict[str, float] | None = None,
 ) -> DataFrame:
     """Full reference-semantics search: returns the top-k
     (doc_id, rel, page_rank, score) with the Q6 deterministic tie-break."""
     k = k or index.cfg.topk_default
-    matches = _query_matches(index, query, base=base)
     scored = score_matches(
         index,
-        matches,
+        _query_matches(index, query),
         mode=mode,
         page_rank=page_rank,
         stems=query_terms_needed(index, query),
-        idf_map=idf_map,
     )
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -687,90 +590,29 @@ def search_many(
     page_rank: DataFrame | None = None,
 ) -> DataFrame:
     """Batch evaluation: one DataFrame (query, doc_id, rel, page_rank,
-    score) holding every query's top-k.
+    score) holding every query's top-k, sorted by query, then rank.
 
-    Scale shape: the expensive part of a query — posting scan + codec
-    decode + explode — is done ONCE for the union of all queries' stems
-    (one ``term.isin(...)`` pushed scan, persisted), and each per-query
-    plan filters that shared base. The per-query combine/score stages
-    then run over candidate-set-sized data only, and the union runs as
-    one Spark job. Evaluation is EAGER (the result is <= k rows per
-    query) so the shared scan's cache is released before returning —
-    round-1 shape was N independent plans = N full scans."""
-    spark = index.postings.sparkSession
-    result_schema = (
-        "query string, doc_id long, rel double, "
-        "page_rank double, score double"
+    A thin front for ``search_batch``: the distinct queries run once in
+    its one plan, and a query string given n times comes back with its
+    rows repeated n times. Queries come back in lexicographic order;
+    callers key on the ``query`` column."""
+    from collections import Counter
+
+    counts = Counter(queries)
+    res = search_batch(
+        index, list(counts), k=k, mode=mode, page_rank=page_rank
     )
-    if not queries:
-        return spark.createDataFrame([], result_schema)
-    if len(queries) > index.cfg.batch_dispatch_threshold:
-        # cost-based dispatch (mirrors the WAND single-term dispatch):
-        # past the threshold the union plan's O(N) Catalyst branches and
-        # single driver collect lose to the one-plan queries-as-data
-        # path. Duplicate query strings are evaluated ONCE on the batch
-        # plan and re-expanded per occurrence afterwards (r03 verdict
-        # #9 — the old guard fell back to the O(N)-branch union path
-        # whenever the batch contained a single duplicate). The final
-        # sort restores this function's per-query rank order over
-        # ≤ N·k already-materialized rows (overall query order is
-        # lexicographic here vs input-order on the union path; callers
-        # key on the ``query`` column).
-        from collections import Counter
-
-        counts = Counter(queries)
-        res = search_batch(
-            index, list(counts), k=k, mode=mode, page_rank=page_rank
+    dups = [(q, c) for q, c in counts.items() if c > 1]
+    if dups:
+        cdf = local_df(
+            index.postings.sparkSession, dups, "query string, _n int"
         )
-        if any(c > 1 for c in counts.values()):
-            cdf = local_df(
-                spark,
-                [(q, c) for q, c in counts.items() if c > 1],
-                "query string, _n int",
-            )
-            dup = (
-                res.join(F.broadcast(cdf), "query")
-                .withColumn(
-                    "_i", F.explode(F.sequence(F.lit(2), F.col("_n")))
-                )
-                .drop("_n", "_i")
-            )
-            res = res.unionByName(dup)
-        return res.select(
-            "query", "doc_id", "rel", "page_rank", "score"
-        ).orderBy("query", F.desc("score"), F.asc("doc_id"))
-    all_stems: list[str] = []
-    for q in queries:
-        all_stems.extend(query_terms_needed(index, q))
-    all_stems = list(dict.fromkeys(all_stems))
-    base = term_matches(index, all_stems)
-    persisted = len(queries) > 1 and bool(all_stems)
-    if persisted:
-        # eager materialization: one small job fills the cache before the
-        # union plan runs, so concurrent branches never race to compute
-        # the shared scan (lazy persist let every branch kick it off)
-        base = base.persist()
-        base.count()
-    try:
-        # one idf lookup for the whole batch (not one per query)
-        idf_map = _idf_map(index, all_stems) if all_stems else {}
-        parts = []
-        for q in queries:
-            parts.append(
-                search(
-                    index, q, k=k, mode=mode, page_rank=page_rank,
-                    base=base, idf_map=idf_map,
-                ).withColumn("query", F.lit(q))
-            )
-        union = reduce(lambda a, b: a.unionByName(b), parts)
-        union = union.select(
-            "query", "doc_id", "rel", "page_rank", "score"
+        res = res.unionByName(
+            res.join(F.broadcast(cdf), "query")
+            .withColumn("_i", F.explode(F.sequence(F.lit(2), F.col("_n"))))
+            .drop("_n", "_i")
         )
-        rows = union.collect()
-    finally:
-        if persisted:
-            base.unpersist()
-    return local_df(spark, rows, result_schema)
+    return res.orderBy("query", F.desc("score"), F.asc("doc_id"))
 
 
 def _batch_phrase_udf(max_gap: int):
@@ -799,10 +641,8 @@ def search_batch(
     page_rank: DataFrame | None = None,
 ) -> DataFrame:
     """Distributed batch evaluation: ONE plan for any number of queries
-    (VERDICT r02 #3 — ``search_many`` unions N per-query branches, so
-    Catalyst planning is O(N) and results funnel through one driver
-    collect; fine for 7 queries, a ceiling for a 10k-query offline
-    evaluation).
+    (the plan does not grow with N, and results stay executor-side —
+    the shape a 10k-query offline evaluation needs).
 
     Shape: the batch is DATA, not plan structure —
       (query, comp_id, term) rows  (driver-parsed, broadcast)
@@ -820,12 +660,11 @@ def search_batch(
     query — the driver never funnels the rows) so the shared decoded
     scan can be released before returning.
 
-    Quirk semantics identical to ``search``/``search_many``: AND scores
-    the LEFT side only (Q4), OR unions (doc, term) pairs (the Q5
-    right-wins bias is value-neutral — both sides read the same index),
-    NOT anti-joins, phrase uses the gap-``max_gap`` matcher (Q8),
-    tie-break score DESC doc_id ASC (Q6). Duplicate query strings are
-    evaluated once."""
+    Quirk semantics identical to ``search``: AND scores the LEFT side
+    only (Q4), OR unions (doc, term) pairs (the Q5 right-wins bias is
+    value-neutral — both sides read the same index), NOT anti-joins,
+    phrase uses the gap-``max_gap`` matcher (Q8), tie-break score DESC
+    doc_id ASC (Q6). Duplicate query strings are evaluated once."""
     spark = index.postings.sparkSession
     k = k or index.cfg.topk_default
     result_schema = (

@@ -39,8 +39,10 @@ def test_search_plan_properties(saved_index):
 def test_phrase_plan_cogroups_on_shard(saved_index):
     """The phrase candidate+gap check is ONE FlatMapGroupsInPandas per
     shard over posting BLOCK rows gated by a broadcast shard whitelist —
-    per-doc position arrays never shuffle through a collect_list."""
-    from search_engine_spark.operators.query import search
+    per-doc position arrays never shuffle through a collect_list. A
+    single-stem phrase takes the same path (no whitelist to build), and
+    the survivors are the broadcast side of their doc_stats join."""
+    from search_engine_spark.operators.query import phrase_matches, search
 
     plan = _plan(search(saved_index, '"banana recipe"', k=10))
     assert "FlatMapGroupsInPandas" in plan
@@ -50,6 +52,20 @@ def test_phrase_plan_cogroups_on_shard(saved_index):
     assert "collect_list" not in plan
     # block rows reach the scan with the stems pushed
     assert "In(term, [" in plan
+    single = _plan(search(saved_index, '"banana"', k=10))
+    assert "FlatMapGroupsInPandas" in single
+    assert "collect_list" not in single
+    # survivors ⋈ doc_stats is a broadcast join that builds on the
+    # survivors (left) side, not on doc_stats
+    for stems in (["banana", "recip"], ["banana"]):
+        joins = [
+            line.strip(" :+-")
+            for line in _plan(phrase_matches(saved_index, stems)).splitlines()
+            if "Join " in line and "LeftSemi" not in line
+        ]
+        assert len(joins) == 1, joins
+        assert joins[0].startswith("BroadcastHashJoin"), joins
+        assert "Inner, BuildLeft" in joins[0], joins
     from pyspark.sql import functions as F
 
     df = saved_index.postings.filter(F.col("term") == "banana").select(

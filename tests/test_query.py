@@ -17,6 +17,8 @@ QUERY_SET = [
     "traveling",                  # stems to same as "travel"
     "travel traveling",
     '"banana recipe"',            # planted adjacent phrase
+    '"banana"',                   # single-stem phrase
+    '"banana banana"',            # repeated stem: one distinct stem
     "banana AND recipe",
     "banana OR recipe",
     "banana NOT recipe",
@@ -290,44 +292,52 @@ def test_search_batch_matches_search_many(spark_index):
             assert rows == exp, (mode, q)
 
 
-def test_search_many_dispatches_to_batch(spark_index):
-    """Past ``batch_dispatch_threshold`` distinct queries, search_many
-    must route to the one-plan distributed batch path and still return
-    per-query rank-sorted rows identical to the union path."""
+def _search_many_spied(index, queries):
+    """Run search_many under a search_batch spy; check it made one
+    search_batch call with the distinct queries in first-seen order and
+    returned rows rank-sorted per query. Returns query -> rows."""
     from unittest.mock import patch
 
     from search_engine_spark.operators import query as qmod
 
-    # > threshold distinct queries (threshold=32 default): mix shapes
-    base = [
-        "banana recipe", "banana AND recipe", "banana OR recipe",
-        "banana NOT recipe", '"banana recipe"', "spark", "the banana",
-    ]
-    queries = base + [f"banana zzfill{i}" for i in range(30)]
-    assert len(set(queries)) == len(queries) > 32
+    with patch.object(
+        qmod, "search_batch", wraps=qmod.search_batch
+    ) as spy:
+        rows = qmod.search_many(index, queries, k=10).collect()
+    assert spy.call_count == 1, queries
+    assert spy.call_args[0][1] == list(dict.fromkeys(queries))
+    keys = [(r.query, -r.score, r.doc_id) for r in rows]
+    assert keys == sorted(keys), queries
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r.query, []).append((r.doc_id, round(r.score, 9)))
+    return by_q
 
-    with patch.object(
-        qmod, "search_batch", wraps=qmod.search_batch
-    ) as spy:
-        got_rows = qmod.search_many(spark_index, queries, k=10).collect()
-        assert spy.call_count == 1
-    got = {}
-    for r in got_rows:
-        got.setdefault(r.query, []).append((r.doc_id, round(r.score, 9)))
-    # duplicate queries (or N <= threshold) keep the union path
-    with patch.object(
-        qmod, "search_batch", wraps=qmod.search_batch
-    ) as spy:
-        exp_rows = qmod.search_many(
-            spark_index, base, k=10
-        ).collect()
-        assert spy.call_count == 0
-    exp = {}
-    for r in exp_rows:
-        exp.setdefault(r.query, []).append((r.doc_id, round(r.score, 9)))
-    for q in base:
-        # dispatched rows must already be rank-sorted per query
-        assert got.get(q, []) == exp.get(q, []), q
+
+_DISPATCH_QUERIES = ["banana recipe", '"banana recipe"', "banana AND recipe"]
+
+
+def test_search_many_dispatches_to_batch(spark_index):
+    """search_many is a thin front for search_batch at every N: N=1 and
+    N=3 each make exactly one search_batch call with the distinct
+    queries, and rows come back rank-sorted per query."""
+    one = _search_many_spied(spark_index, _DISPATCH_QUERIES[:1])
+    three = _search_many_spied(spark_index, _DISPATCH_QUERIES)
+    assert set(three) <= set(_DISPATCH_QUERIES)
+    assert one["banana recipe"] == three["banana recipe"]
+
+
+def test_search_many_duplicate_queries_still_dispatch(spark_index):
+    """A duplicate-containing batch still takes the one search_batch
+    call: duplicates are evaluated once and re-expanded per occurrence,
+    every row of a twice-given query appearing twice in rank order."""
+    three = _search_many_spied(spark_index, _DISPATCH_QUERIES)
+    five = _search_many_spied(
+        spark_index, _DISPATCH_QUERIES + _DISPATCH_QUERIES[:2]
+    )
+    for i, q in enumerate(_DISPATCH_QUERIES):
+        n = 2 if i < 2 else 1
+        assert five[q] == [x for x in three[q] for _ in range(n)], q
 
 
 def test_search_batch_with_pagerank(spark_index, spark):
@@ -420,36 +430,3 @@ def test_local_df_arrow_fallback_semantics(spark):
     ]
     got = local_df(spark, [(1, 0.25)], "doc_id: long, page_rank: double")
     assert got.columns == ["doc_id", "page_rank"]
-
-
-def test_search_many_duplicate_queries_still_dispatch(spark_index):
-    """r03 verdict #9: a duplicate-containing batch past the threshold
-    must still take the ONE-plan batch path (the old guard fell back to
-    O(N) union branches on a single duplicate); duplicates are
-    evaluated once and re-expanded per occurrence."""
-    from unittest.mock import patch
-
-    from search_engine_spark.operators import query as qmod
-
-    base = ["banana recipe", '"banana recipe"', "banana AND recipe"]
-    queries = base + [f"banana zzfill{i}" for i in range(31)] + base
-    assert len(queries) > 32 and len(set(queries)) < len(queries)
-
-    with patch.object(
-        qmod, "search_batch", wraps=qmod.search_batch
-    ) as spy:
-        rows = qmod.search_many(spark_index, queries, k=10).collect()
-        assert spy.call_count == 1
-        # the batch plan saw each DISTINCT query exactly once
-        assert sorted(spy.call_args[0][1]) == sorted(set(queries))
-
-    got = {}
-    for r in rows:
-        got.setdefault(r.query, []).append((r.doc_id, round(r.score, 9)))
-    exp_rows = qmod.search_many(spark_index, base, k=10).collect()
-    exp = {}
-    for r in exp_rows:
-        exp.setdefault(r.query, []).append((r.doc_id, round(r.score, 9)))
-    for q in base:
-        # two occurrences -> every row exactly twice, still rank-sorted
-        assert got[q] == [x for x in exp[q] for _ in range(2)], q

@@ -2,6 +2,8 @@
 """Mirror the driver's correctness gate: run every queries() entry on
 Spark and its oracle_sql() on DuckDB over the same parquet tables at
 sf0.01, compare row-count + schema-names + order-insensitive value hash.
+An oracle-checked entry must return scalar columns only (the gate's
+canonicalizer hashes scalars): an array/map/struct column fails it.
 
 Usage: python tools/selfcheck.py [sf_dir] [only_query ...]
        SELFCHECK_JSON=SELFCHECK_r05.json python tools/selfcheck.py
@@ -55,6 +57,8 @@ def main():
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry_mod
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
     from search_engine_spark.session import get_spark
 
     qs = entry_mod.queries()
@@ -95,10 +99,15 @@ def main():
                             "status": status,
                             "secs": round(dt, 2)}
             continue
+        nested = [
+            f.name
+            for f in sdf.schema.fields
+            if isinstance(f.dataType, (ArrayType, MapType, StructType))
+        ]
         ores = con.execute(oracles[name])
         ocols = [d[0] for d in ores.description]
         orows = ores.fetchall()
-        ok_cols = sorted(scols) == sorted(ocols)
+        ok_cols = sorted(scols) == sorted(ocols) and not nested
         ok_rows = len(srows) == len(orows)
         sh = value_hash(srows, scols)
         oh = value_hash(orows, ocols)
@@ -108,14 +117,19 @@ def main():
             n_pass += 1
         else:
             n_fail += 1
+        if nested:
+            cols_msg = f"non-scalar {nested}"
+        else:
+            cols_msg = "ok" if ok_cols else f"{scols} vs {ocols}"
         print(
             f"{name:24s} {status} rows={len(srows)}/{len(orows)} "
-            f"cols={'ok' if ok_cols else f'{scols} vs {ocols}'} "
+            f"cols={cols_msg} "
             f"hash={'ok' if ok_hash else 'MISMATCH'} ({dt:.1f}s)"
         )
         report[name] = {"mode": "oracle", "status": status,
                         "rows": len(srows), "rows_oracle": len(orows),
                         "cols_match": ok_cols, "hash_match": ok_hash,
+                        "non_scalar_cols": nested,
                         "secs": round(dt, 2)}
         if status == "FAIL" and not ok_hash and ok_cols and ok_rows:
             # print a few diffs
